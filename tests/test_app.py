@@ -92,6 +92,47 @@ def test_app_field_name_resolution(spark, ms_dir, tmp_path):
     assert set(back["ms_rows"].toPandas()["FIELD_ID"]) == {1}
 
 
+def test_app_unknown_field_name_fails_loudly(spark, ms_dir, tmp_path):
+    """A field NAME that matches no FIELD row is an error naming it —
+    alone it would otherwise average every field, beside a known id it
+    would silently be dropped."""
+    for spec in ("NOSUCH", "0,NOSUCH"):
+        with pytest.raises(ValueError, match="NOSUCH"):
+            _run(spark, ms_dir, tmp_path, ["timechannel", ms_dir, "-f", spec])
+    assert not os.path.exists(os.path.join(str(tmp_path), "out.ms"))
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest Spark job in the status store (ids are
+    sequential, and jobsList is newest first), -1 before any job."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_app_bda_builds_row_plan_once(spark, ms_dir, tmp_path):
+    """The bda command materializes its binned row table once instead
+    of replaying the row-side plan for each of the eleven tables it
+    writes: the whole command (read, average, write) runs at most 60% of
+    the 125 Spark jobs it ran when every table replayed the lazy plan
+    (measured on this fixture before the change). Its checkpoints are
+    not plan-keyed cache entries: the session's cache manager is as
+    empty after the command as before it."""
+    from xova_spark.sharedframes import clear_shared
+
+    clear_shared()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    first = _last_job_id(spark)
+    _run(spark, ms_dir, tmp_path,
+         ["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16", "-mc", "2"])
+    n_jobs = _last_job_id(spark) - first
+    assert 0 < n_jobs <= 0.6 * 125, n_jobs
+    assert cache.isEmpty()
+
+
 def test_app_bda(spark, ms_dir, tmp_path):
     out = _run(
         spark, ms_dir, tmp_path,
@@ -241,6 +282,49 @@ def test_app_bda_output_passes_check(spark, ms_dir, tmp_path):
     assert check_spw(back).count() == 0
 
 
+@pytest.mark.parametrize("cmd", [
+    ["timechannel", "-t", "4", "-c", "8"],
+    ["bda", "-d", "0.95", "-fov", "0.315", "-t", "16"],
+])
+def test_load_ms_manifest_schema_matches_inferred(spark, ms_dir, tmp_path, cmd):
+    """load_ms reads a written MS with write_ms's schema manifest, which
+    must give exactly the schemas Spark infers without it — names,
+    types, nullability and column order, including ms_rows' partition
+    columns FIELD_ID/DATA_DESC_ID last — while running no Spark job."""
+    from xova_spark.sources.ms_fixture import load_ms
+
+    out = os.path.join(str(tmp_path), "manifest.ms")
+    Application([cmd[0], ms_dir, *cmd[1:], "-o", out], spark=spark).execute()
+    first = _last_job_id(spark)
+    with_manifest = load_ms(spark, out)
+    assert _last_job_id(spark) == first
+    os.remove(os.path.join(out, "_schemas.json"))
+    inferred = load_ms(spark, out)
+    assert sorted(with_manifest) == sorted(inferred)
+    for name, df in inferred.items():
+        assert with_manifest[name].schema == df.schema, name
+    assert inferred["ms_rows"].columns[-2:] == ["FIELD_ID", "DATA_DESC_ID"]
+
+
+def test_load_ms_manifest_opens_empty_table(spark, ms, tmp_path):
+    """An empty selection writes ms_rows as a partitioned 0-row table
+    with no parquet footer: load_ms opens it from the manifest as a
+    0-row frame with the written schema; without the manifest there is
+    nothing to infer from and the table is skipped."""
+    from xova_spark.operators.timechannel import timechannel
+    from xova_spark.sources.ms_fixture import load_ms
+    from xova_spark.sources.ms_writer import write_ms
+
+    out = timechannel(ms, time_bin_secs=4.0, chan_bin_size=8, fields=[99])
+    path = os.path.join(str(tmp_path), "empty.ms")
+    write_ms(out, path)
+    back = load_ms(spark, path)
+    assert back["ms_rows"].count() == 0
+    assert back["ms_rows"].schema.simpleString() == out["ms_rows"].schema.simpleString()
+    os.remove(os.path.join(path, "_schemas.json"))
+    assert "ms_rows" not in load_ms(spark, path)
+
+
 def test_app_unknown_subtable_and_keywords_roundtrip(spark, ms_dir, tmp_path):
     """S10 wholesale passthrough (subtables.py:9-37 + putkeywords :35):
     a subtable this engine knows NOTHING about — plus table keywords —
@@ -334,6 +418,11 @@ def test_app_profile_dump(spark, ms_dir, tmp_path):
         prof = json.load(fh)
     assert prof["write_secs"] > 0
     assert "ms_vis" in prof["tables"]
+    # per-table write seconds, one entry per written table, within the total
+    by_table = prof["write_secs_by_table"]
+    assert set(by_table) == set(prof["tables"])
+    assert all(t > 0 for t in by_table.values())
+    assert sum(by_table.values()) <= prof["write_secs"] + 0.01 * len(by_table)
     plan = open(os.path.join(pdir, "ms_vis.plan.txt")).read()
     assert "Physical Plan" in plan
     # the browsable report: stats table + every plan in a fold, and the

@@ -10,8 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from xova_spark.operators import bda as B
+from xova_spark.operators.timechannel import average_weights
 from xova_spark.queries import bda as Q
-from xova_spark.testing import assert_frames_match
+from xova_spark.testing import assert_frames_match, assert_same_bag
 
 
 @pytest.fixture(scope="module")
@@ -109,6 +110,36 @@ def test_bda_pipeline_remap_consistency(spark, ms):
         assert g["CHAN_FREQ"].is_monotonic_increasing
         assert g["CHAN_WIDTH"].nunique() == 1
         assert abs(g["CHAN_WIDTH"].sum() - g["TOTAL_BANDWIDTH"].iloc[0]) < 1e-6
+
+
+def test_bda_pipeline_equals_lazy_composition(spark, ms, params):
+    """bda() builds every table from one materialized cut of the binned
+    row table; each must equal the all-lazy composition of the
+    component functions it replaces, table by table."""
+    out = B.bda(ms, Q.DECORR, Q.MAX_FOV, Q.TIME_CAP, Q.MIN_NCHAN)
+    binned = B.assign_bins(ms["ms_rows"], params)
+    bins = B.bin_map(binned)
+    dmap = B.ddid_map(params, ms)
+    grid = B.spw_grid(params, ms)
+    want = {
+        "ms_rows": B.remap_main(
+            B._remap_rows(B.average_rows(binned, with_row_id=True), dmap)
+        ),
+        "ms_weights": average_weights(ms["ms_weights"], bins, keep_rep=True)
+        .withColumnRenamed("rep", "row_id"),
+        "ms_vis": B.average_vis(ms["ms_vis"], bins, keep_rep=True)
+        .withColumnRenamed("rep", "row_id")
+        .withColumnRenamed("chan_bin", "chan"),
+        "spw": grid,
+        "ddid_map": dmap,
+        **B.conformant_subtables(dmap, grid),
+    }
+    assert set(want) == {
+        "ms_rows", "ms_weights", "ms_vis", "ddid", "spw_chans", "spw_meta",
+        "spw", "ddid_map",
+    }
+    for name, df in want.items():
+        assert_same_bag(out[name], df, name)
 
 
 def test_bin_params_match_independent_smearing_model(spark, ms, params):

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from xova_spark.operators import timechannel as tc
 from xova_spark.operators.check import check_ms, check_spw
 from xova_spark.queries import msdomain
-from xova_spark.testing import assert_frames_match
+from xova_spark.testing import assert_frames_match, assert_same_bag
 
 
 @pytest.fixture(scope="module")
@@ -109,3 +109,24 @@ def test_spw_averaging_bandwidth_conserved(spark, ms):
     new = out_meta.toPandas().set_index("SPECTRAL_WINDOW_ID")["TOTAL_BANDWIDTH"]
     for spw in orig.index:
         assert abs(orig[spw] - new[spw]) < 1e-6
+
+
+def test_timechannel_pipeline_equals_lazy_composition(spark, ms):
+    """timechannel() builds its main tables from one materialized cut
+    of the binned row table; each table must equal the all-lazy
+    composition of the component functions it replaces."""
+    out = tc.timechannel(ms, time_bin_secs=4.0, chan_bin_size=8)
+    bins = tc.bin_map(ms["ms_rows"], 4.0)
+    out_chans, out_meta = tc.average_spw(ms["spw_chans"], ms["spw_meta"], 8)
+    want = {
+        "ms_rows": tc.average_rows(ms["ms_rows"], 4.0, with_row_id=True),
+        "ms_weights": tc.average_weights(ms["ms_weights"], bins, keep_rep=True)
+        .withColumnRenamed("rep", "row_id"),
+        "ms_vis": tc.average_vis(ms["ms_vis"], bins, 8, keep_rep=True)
+        .withColumnRenamed("rep", "row_id")
+        .withColumnRenamed("chan_bin", "chan"),
+        "spw_chans": out_chans,
+        "spw_meta": out_meta,
+    }
+    for name, df in want.items():
+        assert_same_bag(out[name], df, name)

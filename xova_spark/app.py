@@ -312,13 +312,20 @@ class Application:
 
     def _resolve_fields(self, tables: dict, fields: list) -> list[int]:
         """Map field NAMEs to FIELD_IDs (the reference resolves names
-        against the FIELD subtable)."""
+        against the FIELD subtable). A name that matches no FIELD row
+        is an error: dropping it would widen the selection, up to every
+        field when no other spec is left."""
         if not fields:
             return []
         names = {f for f in fields if isinstance(f, str)}
         ids = [f for f in fields if isinstance(f, int)]
         if names:
             rows = tables["field"].filter(F.col("NAME").isin(list(names))).collect()
+            missing = names - {r["NAME"] for r in rows}
+            if missing:
+                raise ValueError(
+                    f"unknown field name(s): {', '.join(sorted(missing))}"
+                )
             ids += [int(r["FIELD_ID"]) for r in rows]
         return sorted(set(ids))
 
@@ -431,11 +438,13 @@ class Application:
         from xova_spark.sources.ms_writer import write_ms
 
         t0 = time.perf_counter()
-        write_ms(out, args.output, force=args.force)
+        secs_by_table = write_ms(out, args.output, force=args.force)
         if getattr(args, "profile", None):
             from xova_spark.profiling import write_profile
 
-            write_profile(out, args.profile, time.perf_counter() - t0)
+            write_profile(
+                out, args.profile, time.perf_counter() - t0, secs_by_table
+            )
         return args.output
 
 

@@ -45,6 +45,24 @@ row table, so the params join back to rows/vis is a broadcast. Phase 2
 is one shuffle each for rows and vis, both keyed on the (partition,
 baseline) prefix. The SPW/DDID regeneration operates on the distinct
 channelisation set (A4/A5) — driver-scale data, broadcast back (J3).
+
+The full pipeline, ``bda()``, returns tables that are each written by
+their own action. Left lazy, every one of them would replay the whole
+row-side plan from the scans (FLAG_ROW derivation, bin_params, assign_bins, the rep
+window). So bda() takes ONE cut: an eager ``localCheckpoint`` of the
+binned row table with ``rep`` attached — row-scale, three orders of
+magnitude below the visibility table. ms_rows aggregates it and the
+weights/vis bin map is a plain select of it. The distinct
+(DATA_DESC_ID, out_nchan) set — at most #SPW x #divisors rows, the same
+set params yields — is read off the cut once, as the ddid_map it
+remints; it and the SPW grid built from it are checkpointed too, so the
+five metadata tables are each a write of driver-scale data rather than
+a replay of the row plan. Checkpoints, not ``persist``: they are not
+matched by plan in the session's cache manager, so nothing outlives the
+command or leaks into a later one on the same input. The component
+functions (bin_params, assign_bins, bin_map, ddid_map, spw_grid,
+average_*) stay lazy: the registry entries compose them into single
+plans that their oracles and plan audits check as written.
 """
 
 from __future__ import annotations
@@ -54,10 +72,20 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from xova_spark.operators.timechannel import BIN_KEYS, BL_KEYS, PART_KEYS, _fallback
+from xova_spark.operators.timechannel import (
+    BIN_KEYS,
+    BL_KEYS,
+    PART_KEYS,
+    _fallback,
+    average_weights,
+    map_fits_broadcast,
+    with_rep,
+)
 
 C_LIGHT = 299792458.0  # m/s
 OMEGA_E = 7.292115e-5  # Earth sidereal rotation rate, rad/s
+
+BIN_MAP_COLS = ("row_id", "rep", *BIN_KEYS, "chan_fac", "FLAG_ROW")
 
 
 def sinc_inverse(decorr: float) -> float:
@@ -226,12 +254,9 @@ def bin_map(binned: DataFrame) -> DataFrame:
     groups on (rep, chan_bin, corr) instead of 8 wide columns: ~3x
     faster at bench scale (narrower hash keys + narrower shuffle rows;
     the wide keys are re-attached afterwards by joining the rep -> keys
-    dim — join strategy left to AQE). The window below runs on the ROW
-    table, not the visibility table — cheap."""
-    w = Window.partitionBy(*BIN_KEYS)
-    return binned.withColumn("rep", F.min("row_id").over(w)).select(
-        "row_id", "rep", *BIN_KEYS, "chan_fac", "FLAG_ROW"
-    )
+    dim — join strategy left to AQE). The window runs on the ROW table,
+    not the visibility table — cheap."""
+    return with_rep(binned).select(*BIN_MAP_COLS)
 
 
 def average_vis(
@@ -249,8 +274,6 @@ def average_vis(
     # hint is SIZE-GATED by one planning count (the reference's eager
     # plan-pass analogue, chunking.py:281-285). Small -> hinted
     # single-shuffle plan; at 100 TB -> plain joins, AQE decides.
-    from xova_spark.operators.timechannel import map_fits_broadcast
-
     fits = map_fits_broadcast(bins, map_broadcast_rows)
     narrow = bins.select("row_id", "rep", "chan_fac")
     dim = bins.select("rep", *BIN_KEYS).distinct()
@@ -300,9 +323,8 @@ def spw_grid(params: DataFrame, tables: dict) -> DataFrame:
     channel grid a uniform linspace over the original band
     (averaging.py:504-523). NEW_SPW_ID = dense_rank over the distinct
     set (deterministic). Driver-scale data: the distinct set has at most
-    #SPWs x #divisors rows."""
-    from pyspark.sql import Window
-
+    #SPWs x #divisors rows. ``params`` is any frame carrying
+    (DATA_DESC_ID, out_nchan) — bin_params' output or its distinct set."""
     band = tables["spw_chans"].groupBy("SPECTRAL_WINDOW_ID").agg(
         F.min(F.col("CHAN_FREQ") - F.col("CHAN_WIDTH") / 2).alias("f_start"),
         F.sum("CHAN_WIDTH").alias("band"),
@@ -338,9 +360,7 @@ def spw_grid(params: DataFrame, tables: dict) -> DataFrame:
 def ddid_map(params: DataFrame, tables: dict) -> DataFrame:
     """J3: old (DATA_DESC_ID, out_nchan) -> NEW_DATA_DESC_ID /
     NEW_SPW_ID broadcast remap (averaging.py:527-547,693-698).
-    POLARIZATION_ID carries over unchanged."""
-    from pyspark.sql import Window
-
+    POLARIZATION_ID carries over unchanged. ``params`` as in spw_grid."""
     ddid = tables["ddid"]
     distinct = (
         params.join(F.broadcast(ddid), "DATA_DESC_ID")
@@ -392,16 +412,18 @@ def bda(
     params = bin_params(
         rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
     )
-    binned = assign_bins(rows, params)
-    dmap = ddid_map(params, tables)
-    grid = spw_grid(params, tables)
-    bins = bin_map(binned)
-    remapped = _remap_rows(average_rows(binned, with_row_id=True), dmap)
+    # One materialized cut of the binned rows serves every table below
+    # ("Scale design" in the module docstring). Every params group has
+    # rows, so the cut's channelisations are exactly the set params yields.
+    cut = with_rep(assign_bins(rows, params)).localCheckpoint(eager=True)
+    dmap = ddid_map(cut.select("DATA_DESC_ID", "out_nchan"), tables)
+    dmap = dmap.localCheckpoint(eager=True)
+    grid = spw_grid(dmap, tables).localCheckpoint(eager=True)
+    bins = cut.select(*BIN_MAP_COLS)
+    remapped = _remap_rows(average_rows(cut, with_row_id=True), dmap)
     rewritten = {
         "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"
     }
-    from xova_spark.operators.timechannel import average_weights
-
     out_weights = None
     if "ms_weights" in tables:
         out_weights = (

@@ -30,6 +30,18 @@ the grouped distribution, so Catalyst inserts no second exchange). The
 vis aggregation joins the big samples table to the (row_id -> bin) map —
 broadcast when small, AQE shuffle-join otherwise — then aggregates in a
 single shuffle. Skewed baselines are handled by AQE skew-join splitting.
+
+The full pipeline, ``timechannel()``, writes each table as its own
+action; left lazy, each would replay the row-side plan (FLAG_ROW
+derivation, the min-TIME window, the rep window) from the scans. So it
+takes ONE cut: an eager ``localCheckpoint`` of the binned row table with
+``rep`` attached (row-scale, far below the visibility table). ms_rows
+aggregates it directly and the weights/vis bin map is a plain select of
+it. A checkpoint, not ``persist``: it is not matched by plan in the
+session's cache manager, so nothing outlives the command. The component
+functions (assign_time_bins, bin_map, average_rows, average_*) stay
+lazy for the registry entries, whose oracles and plan audits check the
+composed single plans.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ from pyspark.sql import functions as F
 PART_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER"]  # app.py:43 GROUP_COLS
 BL_KEYS = ["ANTENNA1", "ANTENNA2"]
 BIN_KEYS = PART_KEYS + BL_KEYS + ["time_bin"]
+BIN_MAP_COLS = ("row_id", "rep", *BIN_KEYS, "FLAG_ROW")
 
 # Size gate for broadcasting the row -> bin map: ~64 bytes/row serialized,
 # so 4M rows ~ 256 MB build side — comfortably under executor memory on
@@ -66,10 +79,6 @@ def planned_broadcast(df: DataFrame, limit_rows: int | None = None):
     return df
 
 
-# Decision memo keyed by DataFrame object: a pipeline builds ONE bin map
-# and derives several joins from it (rows/weights/vis) — one planning
-# count covers them all. The df reference is held so id() stays unique.
-_FITS_CACHE: dict[int, tuple[DataFrame, int, bool]] = {}
 # Catalyst's plan-statistics estimate is trustworthy in ONE direction
 # only: scan-derived plans carry (compressed) file bytes, so a SMALL
 # estimate really is small — but join nodes multiply child stats, so a
@@ -87,33 +96,23 @@ def map_fits_broadcast(df: DataFrame, limit_rows: int | None = None) -> bool:
 
     Two stages, cheapest first: (1) Catalyst's free plan-statistics
     estimate may CONFIRM a small map with no job at all (scan-derived
-    maps at bench scale); (2) otherwise one exact count(), memoized per
-    map object so sibling operators (average_rows / average_weights /
-    average_vis on the same bin map) share the single planning job —
-    this count is the path a genuinely large input takes, and its False
-    verdict is what keeps 100 TB plans hint-free."""
+    maps at bench scale); (2) otherwise one exact count() — the path a
+    genuinely large input takes, and its False verdict is what keeps
+    100 TB plans hint-free. The full pipelines hand in a bin map cut
+    from one materialized row table, so their counts are short jobs."""
     if limit_rows is None:
         limit_rows = int(
             os.environ.get("XOVA_MAP_BROADCAST_ROWS", DEFAULT_MAP_BROADCAST_ROWS)
         )
     if limit_rows <= 0:
         return False
-    hit = _FITS_CACHE.get(id(df))
-    if hit is not None and hit[0] is df and hit[1] == limit_rows:
-        return hit[2]
-    fits = None
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         if est <= limit_rows * _EST_CONFIRM_BYTES_PER_ROW:
-            fits = True
+            return True
     except Exception:  # noqa: BLE001 — stats unavailable; fall through to count
         pass
-    if fits is None:
-        fits = df.count() <= limit_rows
-    if len(_FITS_CACHE) > 512:
-        _FITS_CACHE.clear()
-    _FITS_CACHE[id(df)] = (df, limit_rows, fits)
-    return fits
+    return df.count() <= limit_rows
 
 
 def _fallback(unflagged_expr, all_expr):
@@ -200,11 +199,14 @@ def bin_map(rows: DataFrame, time_bin_secs: float = 2.0) -> DataFrame:
     instead of the wide key (narrower hash keys + shuffle rows, ~3x at
     bench scale) and re-attach the wide key afterwards by broadcasting
     the tiny rep -> keys dim. The window runs on the row table only."""
-    w = Window.partitionBy(*BIN_KEYS)
-    return (
-        assign_time_bins(rows, time_bin_secs)
-        .withColumn("rep", F.min("row_id").over(w))
-        .select("row_id", "rep", *BIN_KEYS, "FLAG_ROW")
+    return with_rep(assign_time_bins(rows, time_bin_secs)).select(*BIN_MAP_COLS)
+
+
+def with_rep(binned: DataFrame) -> DataFrame:
+    """Attach ``rep`` = min(row_id) within each output bin to a binned
+    row table (one window over the row table, keyed on BIN_KEYS)."""
+    return binned.withColumn(
+        "rep", F.min("row_id").over(Window.partitionBy(*BIN_KEYS))
     )
 
 
@@ -354,13 +356,18 @@ def timechannel(
         rows = rows.filter(F.col("FIELD_ID").isin(fields))
     if scans:
         rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    bins = bin_map(rows, time_bin_secs)
+    # One materialized cut of the binned rows serves every table below
+    # ("Scale design" in the module docstring).
+    cut = with_rep(assign_time_bins(rows, time_bin_secs)).localCheckpoint(
+        eager=True
+    )
+    bins = cut.select(*BIN_MAP_COLS)
     out_chans, out_meta = average_spw(
         tables["spw_chans"], tables["spw_meta"], chan_bin_size
     )
     rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
     return {
-        "ms_rows": average_rows(rows, time_bin_secs, with_row_id=True),
+        "ms_rows": average_binned_rows(cut, with_row_id=True),
         "ms_weights": (
             average_weights(tables["ms_weights"], bins, keep_rep=True)
             .withColumnRenamed("rep", "row_id")

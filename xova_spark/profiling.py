@@ -20,9 +20,16 @@ import os
 from pyspark.sql import DataFrame
 
 
-def write_profile(tables: dict, path: str, write_secs: float) -> None:
+def write_profile(
+    tables: dict,
+    path: str,
+    write_secs: float,
+    write_secs_by_table: dict,
+) -> None:
     """Dump ``<path>/<table>.plan.txt`` for every DataFrame in
-    ``tables``, ``<path>/profile.json``, and a self-contained browsable
+    ``tables``, ``<path>/profile.json`` (the write total and, per table,
+    write_ms's seconds — a table that replays shared lineage shows up
+    there), and a self-contained browsable
     ``<path>/profile.html`` (per-table plan-shape stats + collapsible
     full plans — the Catalyst-appropriate analogue of the reference's
     bokeh ``visualize`` artifact, with no plotting dependency)."""
@@ -49,6 +56,9 @@ def write_profile(tables: dict, path: str, write_secs: float) -> None:
         json.dump(
             {
                 "write_secs": round(write_secs, 3),
+                "write_secs_by_table": {
+                    n: round(t, 3) for n, t in write_secs_by_table.items()
+                },
                 "tables": sorted(names),
                 "plan_stats": {
                     n: {k: v for k, v in s.items()

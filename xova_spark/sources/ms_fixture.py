@@ -305,10 +305,7 @@ def load_ms(spark, ms_dir: str) -> dict:
         stem = entry[:-8] if entry.endswith(".parquet") else entry
         if stem not in names and not stem.startswith("_"):
             names.append(stem)
-    from xova_spark.sources.ms_writer import (
-        empty_from_manifest,
-        load_manifest_schemas,
-    )
+    from xova_spark.sources.ms_writer import load_manifest_schemas, read_table
 
     schemas = load_manifest_schemas(ms_dir)
     for name in names:
@@ -316,17 +313,12 @@ def load_ms(spark, ms_dir: str) -> dict:
                           os.path.join(ms_dir, name)):
             if os.path.exists(candidate):
                 try:
-                    df = spark.read.parquet(candidate)
+                    df = read_table(spark, candidate, schemas.get(name))
                 except Exception:  # noqa: BLE001 — non-table entry
-                    # An EMPTY table (0-row partitioned write leaves no
-                    # parquet footer) comes back as a 0-row frame via
-                    # write_ms's schema manifest. Otherwise best-effort
-                    # discovery: a directory that is not a parquet
-                    # dataset (scratch dirs, checkpoints) is not a
-                    # subtable and is simply skipped.
-                    df = empty_from_manifest(spark, schemas, name)
-                    if df is None:
-                        continue
+                    # Best-effort discovery: a directory that is not a
+                    # parquet dataset (scratch dirs, checkpoints) is not
+                    # a subtable and is simply skipped.
+                    continue
                 df.createOrReplaceTempView(name)
                 out[name] = df
                 break

@@ -16,9 +16,12 @@ counts. AQE coalescing handles the reference's small-output compaction
 
 from __future__ import annotations
 
+import json
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MAIN_PARTITION_COLS = ("FIELD_ID", "DATA_DESC_ID")
 
@@ -44,9 +47,10 @@ class OutputExistsError(RuntimeError):
     pass
 
 
-def write_ms(tables: dict, path: str, force: bool = False) -> None:
+def write_ms(tables: dict, path: str, force: bool = False) -> dict:
     """S8/S9/S10/S11: write every DataFrame in ``tables`` under
     ``path``; refuse to overwrite unless force (app.py:152-159).
+    Returns ``{table: write seconds}``.
 
     A ``_keywords`` entry (a plain JSON-able dict, keyed by table name)
     is persisted as ``<path>/_keywords.json`` — the parquet-layout
@@ -59,6 +63,7 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
             )
     mode = "overwrite" if force else "errorifexists"
     schemas: dict[str, str] = {}
+    secs: dict[str, float] = {}
     for name, df in tables.items():
         if not isinstance(df, DataFrame):
             continue
@@ -72,32 +77,29 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
         sort_cols = [c for c in SORT_WITHIN.get(name, ()) if c in df.columns]
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
+        t0 = time.perf_counter()
         writer = df.write.mode(mode)
         if name == "ms_rows":
             part = [c for c in MAIN_PARTITION_COLS if c in df.columns]
             if part:
                 writer = writer.partitionBy(*part)
         writer.parquet(os.path.join(path, name))
+        secs[name] = time.perf_counter() - t0
     if schemas:
-        import json
-
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_schemas.json"), "w") as fh:
             json.dump(schemas, fh, indent=1, sort_keys=True)
     keywords = tables.get("_keywords")
     if isinstance(keywords, dict):
-        import json
-
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_keywords.json"), "w") as fh:
             json.dump(keywords, fh, indent=1, sort_keys=True)
+    return secs
 
 
 def load_manifest_schemas(path: str) -> dict:
     """The `_schemas.json` manifest write_ms leaves beside the tables
     (empty dict if absent / unreadable)."""
-    import json
-
     try:
         with open(os.path.join(path, "_schemas.json")) as fh:
             return json.load(fh)
@@ -105,32 +107,24 @@ def load_manifest_schemas(path: str) -> dict:
         return {}
 
 
-def empty_from_manifest(spark: SparkSession, schemas: dict, name: str):
-    """Reconstruct a 0-row DataFrame from the manifest schema, or None."""
-    sch = schemas.get(name)
-    if not sch:
-        return None
-    import json
-
-    from pyspark.sql.types import StructType
-
-    return spark.createDataFrame([], StructType.fromJson(json.loads(sch)))
+def read_table(spark: SparkSession, path: str, schema_json: str | None = None):
+    """Read one parquet table, with its manifest schema when there is
+    one: Spark then runs no schema-inference job, and an EMPTY table (a
+    0-row partitioned write leaves no footer to infer from) comes back
+    as a 0-row frame with its schema. Without a schema Spark infers it,
+    and raises on a directory that is not a parquet dataset."""
+    reader = spark.read
+    if schema_json:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader.parquet(path)
 
 
 def read_ms(spark: SparkSession, path: str) -> dict:
-    """Load a written MS back into a table dict (inverse of write_ms).
-    An empty table (0-row partitioned write leaves no parquet footer)
-    comes back as a 0-row frame via the schema manifest."""
-    out = {}
+    """Load a written MS back into a table dict (inverse of write_ms),
+    each table read with its manifest schema (see read_table)."""
     schemas = load_manifest_schemas(path)
-    for name in sorted(os.listdir(path)):
-        sub = os.path.join(path, name)
-        if os.path.isdir(sub):
-            try:
-                out[name] = spark.read.parquet(sub)
-            except Exception:  # noqa: BLE001 — empty dataset, no footer
-                empty = empty_from_manifest(spark, schemas, name)
-                if empty is None:
-                    raise
-                out[name] = empty
-    return out
+    return {
+        name: read_table(spark, os.path.join(path, name), schemas.get(name))
+        for name in sorted(os.listdir(path))
+        if os.path.isdir(os.path.join(path, name))
+    }

@@ -50,3 +50,14 @@ def assert_frames_match(
                 f"col {c}: first mismatch row {int(np.argmin(eq))}: "
                 f"{av[np.argmin(eq)]!r} vs {bv[np.argmin(eq)]!r}"
             )
+
+
+def assert_same_bag(got, want, name: str = "") -> None:
+    """Spark-side exact equality of two DataFrames as bags: the same
+    columns in the same order and types, and ``exceptAll`` empty in both
+    directions (duplicates count)."""
+    assert got.schema.simpleString() == want.schema.simpleString(), (
+        f"{name}: {got.schema.simpleString()} != {want.schema.simpleString()}"
+    )
+    extra, missing = got.exceptAll(want).count(), want.exceptAll(got).count()
+    assert extra == 0 and missing == 0, f"{name}: {extra} extra, {missing} missing"
