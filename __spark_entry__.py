@@ -207,11 +207,12 @@ _PRIORITY: tuple[str, ...] = (
 
 
 def _registries() -> dict[str, tuple]:
-    from xova_spark.queries import relational
-
+    """Every pack's REGISTRY, merged. Loading fails loudly: a pack that
+    does not import raises, and so does a name two packs both register
+    (a silent overwrite would drop one entry)."""
     merged: dict[str, tuple] = {}
-    merged.update(relational.REGISTRY)
     for modname in (
+        "relational",
         "textops",
         "dedup",
         "similarity",
@@ -231,11 +232,13 @@ def _registries() -> dict[str, tuple]:
         "erq",
         "geoq",
     ):
-        try:
-            mod = __import__(f"xova_spark.queries.{modname}", fromlist=["REGISTRY"])
-            merged.update(mod.REGISTRY)
-        except ImportError:
-            pass
+        mod = __import__(f"xova_spark.queries.{modname}", fromlist=["REGISTRY"])
+        dup = merged.keys() & mod.REGISTRY.keys()
+        if dup:
+            raise ValueError(
+                f"queries.{modname} re-registers {', '.join(sorted(dup))}"
+            )
+        merged.update(mod.REGISTRY)
     ordered: dict[str, tuple] = {n: merged[n] for n in _PRIORITY if n in merged}
     ordered.update(merged)  # existing keys keep their (priority) position
     return ordered

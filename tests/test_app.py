@@ -208,6 +208,24 @@ def test_app_stream_matches_batch_average(spark, ms_dir, ms, tmp_path):
     # stream output now carries the averaged ROW tables too (batch parity)
     assert back["ms_rows"].count() > 0
     assert back["ms_weights"].count() > 0
+    _assert_same_ms_as_batch(
+        spark, got_path, ["timechannel", ms_dir, "-t", "4", "-c", "8"], tmp_path
+    )
+
+
+def _assert_same_ms_as_batch(spark, got_path, batch_cmdline, tmp_path):
+    """Every table the stream wrote equals the batch command's, exactly
+    (the fixture is dyadic-exact), as bags both ways."""
+    from xova_spark.testing import assert_same_bag
+
+    want_path = Application(
+        [*batch_cmdline, "-o", os.path.join(str(tmp_path), "batch.ms")],
+        spark=spark,
+    ).execute()
+    got, want = read_ms(spark, got_path), read_ms(spark, want_path)
+    assert sorted(got) == sorted(want)
+    for name in want:
+        assert_same_bag(got[name], want[name], name)
 
 
 def test_app_stream_bda_matches_batch_average(spark, ms_dir, ms, tmp_path):
@@ -240,6 +258,24 @@ def test_app_stream_bda_matches_batch_average(spark, ms_dir, ms, tmp_path):
     assert len(got) == len(want)
     for c in ("vis_re", "vis_im", "weight_sp", "sigma_sp"):
         assert (abs(got[c] - want[c]) < 1e-9).all(), c
+    _assert_same_ms_as_batch(
+        spark, got_path, ["bda", ms_dir, "-d", "0.95", "-fov", "1.0"], tmp_path
+    )
+
+
+def test_app_stream_refuses_existing_output_before_draining(
+    spark, ms_dir, tmp_path
+):
+    """Without --force an existing output is refused up front, as the
+    other commands do: no stream checkpoint or partial store is left."""
+    from xova_spark.sources.ms_writer import OutputExistsError
+
+    out = os.path.join(str(tmp_path), "exists.ms")
+    os.makedirs(out)
+    with pytest.raises(OutputExistsError):
+        Application(["stream", ms_dir, "-o", out], spark=spark).execute()
+    assert not os.path.exists(out + ".ckpt")
+    assert not os.path.exists(out + ".partials")
 
 
 def test_app_output_reopens_checks_and_reaverages(spark, ms_dir, tmp_path):

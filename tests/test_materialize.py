@@ -113,7 +113,7 @@ def test_ms_maintenance_converges_to_batch_average(
     q.awaitTermination()
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
 
-    got = finalize_vis(spark, out_dir).toPandas()
+    got = finalize_vis(spark, out_dir, bins).toPandas()
     want = tc.average_vis(vis, bins, chan_bin).toPandas()
     keys = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
             "time_bin", "chan_bin", "corr"]
@@ -156,7 +156,7 @@ def test_stream_finalized_ms_write_roundtrip(spark, ms, split_vis, tmp_path):
     out = str(tmp_path / "averaged_ms")
     write_ms(
         {
-            "ms_vis": finalize_vis(spark, part_dir),
+            "ms_vis": finalize_vis(spark, part_dir, bins),
             "spw_chans": out_chans,
             "spw_meta": out_meta,
             "antenna": ms["antenna"],  # S10 passthrough subtable
@@ -219,3 +219,54 @@ def test_cdc_state_converges_regardless_of_chunking(spark, tmp_path):
     assert got.count() == ref.count() > 0
     assert got.exceptAll(ref).count() == 0
     assert ref.exceptAll(got).count() == 0
+
+
+def _cdc_chunks(spark):
+    sf = "/root/testdata/sf0.001"
+    ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
+        "ts", F.to_utc_timestamp(F.col("ts"), "UTC")
+    )
+    return [ev.where(F.col("event_id") % 3 == i) for i in (1, 2, 0)]
+
+
+def test_replayed_batch_merges_once(spark, tmp_path):
+    """foreachBatch is at-least-once: after a restart Spark re-runs a
+    batch that was swapped in but never committed, with the same
+    batch_id. Merging a batch twice under one id must equal merging it
+    once — for the additive CDC n_versions and the rollup counts."""
+    from xova_spark.streaming import materialize as M
+    from xova_spark.testing import assert_same_bag
+
+    c0, c1, _ = _cdc_chunks(spark)
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    batches = [(0, c0), (1, c1)]
+    for out_dir, seq in ((once, batches), (twice, [*batches, (1, c1)])):
+        for bid, chunk in seq:
+            M._cdc_merge_into(chunk, bid, out_dir)
+            M._merge_into(chunk, bid, out_dir + "_rollup", ["event_type"])
+    assert_same_bag(
+        M.read_rollup(spark, twice), M.read_rollup(spark, once), "cdc"
+    )
+    assert_same_bag(
+        M.read_rollup(spark, twice + "_rollup"),
+        M.read_rollup(spark, once + "_rollup"),
+        "rollup",
+    )
+
+
+def test_merge_restores_old_after_torn_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves ``_old`` and no
+    ``current``; the next merge must restore ``_old`` and merge into
+    it, not start the store over from the new batch alone."""
+    from xova_spark.streaming import materialize as M
+    from xova_spark.testing import assert_same_bag
+
+    c0, c1, _ = _cdc_chunks(spark)
+    clean, torn = str(tmp_path / "clean"), str(tmp_path / "torn")
+    for out_dir in (clean, torn):
+        M._cdc_merge_into(c0, 0, out_dir)
+    os.rename(os.path.join(torn, "current"), os.path.join(torn, "_old"))
+    for out_dir in (clean, torn):
+        M._cdc_merge_into(c1, 1, out_dir)
+    assert not os.path.exists(os.path.join(torn, "_old"))
+    assert_same_bag(M.read_rollup(spark, torn), M.read_rollup(spark, clean), "cdc")

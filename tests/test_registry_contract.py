@@ -168,3 +168,19 @@ def test_coverage_header_counts_are_in_sync():
     )
     assert (n_exact_cov, n_ro_cov) == (n_exact_g, n_ro_g)
     assert n_close_g == 0 and n_fail_g == 0
+
+
+def test_registry_name_collision_fails_loudly(monkeypatch):
+    """A name that two packs both register must raise at load time,
+    not let the later pack silently overwrite the earlier entry."""
+    import __spark_entry__ as m
+    from xova_spark.queries import bda, msdomain
+
+    taken = next(iter(msdomain.REGISTRY))
+    monkeypatch.setattr(
+        bda, "REGISTRY", {**bda.REGISTRY, taken: msdomain.REGISTRY[taken]}
+    )
+    import pytest
+
+    with pytest.raises(ValueError, match=taken):
+        m.queries()

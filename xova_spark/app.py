@@ -420,6 +420,12 @@ class Application:
                 scans=scans,
             )
 
+        return self._write(out, tables)
+
+    def _write(self, out: dict, tables: dict) -> str:
+        """The tail every averaging command shares: the V4 UVW
+        post-pass, the P3 output column names, then one write_ms."""
+        args = self.args
         if not args.average_uvw_coordinates:
             # V4: resynthesize UVW at averaged TIMEs, joined before the
             # single write (not the reference's post-write update).
@@ -427,8 +433,9 @@ class Application:
 
             out["ms_rows"] = fixms(out["ms_rows"], tables["antenna"], tables["field"])
 
-        # P3: surface the averaged data under the mapped column names.
-        dc = args.data_column
+        # P3: surface the averaged data under the mapped column names
+        # (``stream`` has no -dc).
+        dc = getattr(args, "data_column", None)
         if "ms_vis" in out and dc and list(dc.items()) != [("DATA", "DATA")]:
             (to_name,) = set(dc.values())
             out["ms_vis"] = out["ms_vis"].withColumnsRenamed(
@@ -446,7 +453,6 @@ class Application:
                 out, args.profile, time.perf_counter() - t0, secs_by_table
             )
         return args.output
-
 
     def _execute_corpus(self) -> str:
         """``xova-spark corpus``: run the training-data funnel (quality,
@@ -733,25 +739,47 @@ class Application:
         return None
 
     def _execute_stream(self, tables: dict) -> str:
-        """``xova-spark stream``: continuous time-and-channel averaging.
+        """``xova-spark stream``: continuous averaging.
 
-        Arriving visibility files (availableNow drain) merge into a
-        partial-aggregate store via foreachBatch; on drain the partials
-        finalize into the A1a averaged columns and the output MS is
-        written through the same write_ms path as the batch commands —
-        the streaming twin of the reference's one-shot
-        read→average→write (app.py:59-128), with identical results
-        because the maintained partials are decomposable sums."""
+        The same plan/assemble steps as the one-shot command
+        (timechannel.py / bda.py: the row table is cut once, up front),
+        with the visibility aggregate as the one table the stream
+        maintains: arriving visibility files (availableNow drain) merge
+        into a partial-aggregate store via foreachBatch; on drain the
+        partials finalize into the A1a averaged columns, the assembly
+        builds every output table from them and the cut, and the MS is
+        written through the same tail as the batch commands — the
+        streaming twin of the reference's one-shot read→average→write
+        (app.py:59-128), with identical results because the maintained
+        partials are decomposable sums."""
         import os
 
-        args = self.args
-        spark = self._session()
+        from xova_spark.operators import bda as B
         from xova_spark.operators import timechannel as tc
-        from xova_spark.sources.ms_writer import write_ms
+        from xova_spark.sources.ms_writer import check_writable
         from xova_spark.streaming.materialize import (
             finalize_vis,
             materialized_ms_vis,
         )
+
+        args = self.args
+        spark = self._session()
+        # Refuse before the drain writes <output>.ckpt / .partials.
+        check_writable(args.output, args.force)
+        if args.mode == "bda":
+            cut = B.plan_bda(
+                tables,
+                args.decorrelation,
+                args.max_fov,
+                args.time_bin_secs or 1e9,
+                args.min_nchan,
+                None,
+                None,
+            )
+            bins = cut.select(*B.BIN_MAP_COLS)
+        else:
+            cut = tc.plan_timechannel(tables, args.time_bin_secs or 2.0, None, None)
+            bins = cut.select(*tc.BIN_MAP_COLS)
 
         vis_dir = args.vis_dir or os.path.join(args.ms, "ms_vis.parquet")
         checkpoint = args.checkpoint or args.output + ".ckpt"
@@ -786,91 +814,16 @@ class Application:
             import shutil
 
             shutil.rmtree(part_dir)
-        # Only the visibility samples ARRIVE; the row table is static, so
-        # its averaged form (and the weights) come from the same batch
-        # operators the one-shot commands use — the stream maintains the
-        # one table batch could not: the sample partials.
-        def _vis_contract(vis_df, bins_df):
-            dim = bins_df.select(*tc.BIN_KEYS, "rep").distinct()
-            return (
-                vis_df.join(dim, tc.BIN_KEYS)
-                .withColumnRenamed("rep", "row_id")
-                .withColumnRenamed("chan_bin", "chan")
-            )
-
+        q = materialized_ms_vis(
+            stream, bins, part_dir, checkpoint, args.chan_bin_size
+        )
+        q.awaitTermination()
+        vis = finalize_vis(spark, part_dir, bins)
         if args.mode == "bda":
-            from xova_spark.operators import bda as B
-            from xova_spark.streaming.materialize import (
-                finalize_bda_vis,
-                materialized_bda_vis,
-            )
-
-            params = B.bin_params(
-                tables["ms_rows"],
-                B.ddid_dims(tables),
-                args.decorrelation,
-                args.max_fov,
-                args.time_bin_secs or 1e9,
-                args.min_nchan,
-            )
-            binned = B.assign_bins(tables["ms_rows"], params)
-            bins = B.bin_map(binned)
-            q = materialized_bda_vis(stream, bins, part_dir, checkpoint)
-            q.awaitTermination()
-            dmap = B.ddid_map(params, tables)
-            grid = B.spw_grid(params, tables)
-            rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans",
-                         "spw_meta", "ddid"}
-            out = {
-                "ms_rows": B.remap_main(
-                    B._remap_rows(B.average_rows(binned, with_row_id=True), dmap)
-                ),
-                "ms_weights": (
-                    tc.average_weights(tables["ms_weights"], bins, keep_rep=True)
-                    .withColumnRenamed("rep", "row_id")
-                ),
-                "ms_vis": _vis_contract(
-                    finalize_bda_vis(spark, part_dir, bins), bins
-                ),
-                "spw": grid,
-                "ddid_map": dmap,
-                **B.conformant_subtables(dmap, grid),
-                **{k: v for k, v in tables.items() if k not in rewritten},
-            }
+            out = B.assemble_bda(tables, cut, vis)
         else:
-            tbin = args.time_bin_secs or 2.0
-            bins = tc.bin_map(tables["ms_rows"], tbin)
-            q = materialized_ms_vis(
-                stream, bins, part_dir, checkpoint, args.chan_bin_size
-            )
-            q.awaitTermination()
-
-            out_chans, out_meta = tc.average_spw(
-                tables["spw_chans"], tables["spw_meta"], args.chan_bin_size
-            )
-            rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans",
-                         "spw_meta"}
-            out = {
-                "ms_rows": tc.average_rows(
-                    tables["ms_rows"], tbin, with_row_id=True
-                ),
-                "ms_weights": (
-                    tc.average_weights(tables["ms_weights"], bins, keep_rep=True)
-                    .withColumnRenamed("rep", "row_id")
-                ),
-                "ms_vis": _vis_contract(finalize_vis(spark, part_dir), bins),
-                "spw_chans": out_chans,
-                "spw_meta": out_meta,
-                **{k: v for k, v in tables.items() if k not in rewritten},
-            }
-        if not args.average_uvw_coordinates:
-            from xova_spark.operators.uvw import fixms
-
-            out["ms_rows"] = fixms(
-                out["ms_rows"], tables["antenna"], tables["field"]
-            )
-        write_ms(out, args.output, force=args.force)
-        return args.output
+            out = tc.assemble_timechannel(tables, cut, vis, args.chan_bin_size)
+        return self._write(out, tables)
 
 
 def main() -> None:

@@ -46,23 +46,28 @@ is one shuffle each for rows and vis, both keyed on the (partition,
 baseline) prefix. The SPW/DDID regeneration operates on the distinct
 channelisation set (A4/A5) — driver-scale data, broadcast back (J3).
 
-The full pipeline, ``bda()``, returns tables that are each written by
-their own action. Left lazy, every one of them would replay the whole
-row-side plan from the scans (FLAG_ROW derivation, bin_params, assign_bins, the rep
-window). So bda() takes ONE cut: an eager ``localCheckpoint`` of the
-binned row table with ``rep`` attached — row-scale, three orders of
-magnitude below the visibility table. ms_rows aggregates it and the
-weights/vis bin map is a plain select of it. The distinct
-(DATA_DESC_ID, out_nchan) set — at most #SPW x #divisors rows, the same
-set params yields — is read off the cut once, as the ddid_map it
-remints; it and the SPW grid built from it are checkpointed too, so the
-five metadata tables are each a write of driver-scale data rather than
-a replay of the row plan. Checkpoints, not ``persist``: they are not
-matched by plan in the session's cache manager, so nothing outlives the
-command or leaks into a later one on the same input. The component
+The full pipeline, ``bda()``, is the same two steps as timechannel()
+around the visibility aggregate. ``plan_bda`` takes ONE cut: an eager
+``localCheckpoint`` of the binned row table with ``rep`` attached —
+row-scale, three orders of magnitude below the visibility table. Left
+lazy, every written table would replay the whole row-side plan from the
+scans (FLAG_ROW derivation, bin_params, assign_bins, the rep window).
+``assemble_bda`` builds the output tables from the cut and an averaged
+visibility table: ms_rows aggregates the cut and the weights bin map is
+a plain select of it. The distinct (DATA_DESC_ID, out_nchan) set — at
+most #SPW x #divisors rows, the same set params yields — is read off
+the cut once, as the ddid_map it remints; it and the SPW grid built
+from it are checkpointed too, so the five metadata tables are each a
+write of driver-scale data rather than a replay of the row plan.
+``xova-spark stream --mode bda`` calls the same two steps, so its
+ms_rows come from the same cut. Checkpoints, not ``persist``: they are
+not matched by plan in the session's cache manager, so nothing outlives
+the command or leaks into a later one on the same input. The component
 functions (bin_params, assign_bins, bin_map, ddid_map, spw_grid,
 average_*) stay lazy: the registry entries compose them into single
-plans that their oracles and plan audits check as written.
+plans that their oracles and plan audits check as written. The A1a
+aggregates themselves (row columns, visibility partials and their
+projection, average_vis, average_weights) are timechannel.py's.
 """
 
 from __future__ import annotations
@@ -76,9 +81,10 @@ from xova_spark.operators.timechannel import (
     BIN_KEYS,
     BL_KEYS,
     PART_KEYS,
-    _fallback,
-    average_weights,
-    map_fits_broadcast,
+    average_vis,
+    row_aggs,
+    sample_tables,
+    select_rows,
     with_rep,
 )
 
@@ -219,26 +225,10 @@ def average_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
     ``with_row_id`` adds row_id = min(input row_id) per bin (the rep
     surrogate) so written BDA output satisfies the load_ms row-identity
     contract and is check-able/re-openable."""
-    fr = F.col("FLAG_ROW")
-    unfl = ~fr
     extra = [F.min("row_id").alias("row_id")] if with_row_id else []
     return binned.groupBy(*BIN_KEYS).agg(
         *extra,
-        F.avg("TIME").alias("TIME"),
-        F.sum("INTERVAL").alias("INTERVAL"),
-        _fallback(F.sum(F.when(unfl, F.col("EXPOSURE"))), F.sum("EXPOSURE")).alias(
-            "EXPOSURE"
-        ),
-        _fallback(
-            F.sum(F.when(unfl, F.col("EXPOSURE") * F.col("TIME_CENTROID")))
-            / F.sum(F.when(unfl, F.col("EXPOSURE"))),
-            F.sum(F.col("EXPOSURE") * F.col("TIME_CENTROID")) / F.sum("EXPOSURE"),
-        ).alias("TIME_CENTROID"),
-        *[
-            _fallback(F.avg(F.when(unfl, F.col(c))), F.avg(F.col(c))).alias(c)
-            for c in ("u", "v", "w")
-        ],
-        F.bool_and(fr).alias("FLAG_ROW"),
+        *row_aggs(),
         F.count("*").alias("n_rows"),
         F.any_value("out_nchan").alias("NUM_CHAN"),
         F.any_value("decorr_chan_width").alias("DECORR_CHAN_WIDTH"),
@@ -257,64 +247,6 @@ def bin_map(binned: DataFrame) -> DataFrame:
     dim — join strategy left to AQE). The window runs on the ROW table,
     not the visibility table — cheap."""
     return with_rep(binned).select(*BIN_MAP_COLS)
-
-
-def average_vis(
-    vis: DataFrame,
-    bins: DataFrame,
-    keep_rep: bool = False,
-    map_broadcast_rows: int | None = None,
-) -> DataFrame:
-    """Phase 2b: ragged visibility averaging — chan_bin width varies per
-    baseline (chan_fac), A1a weighted-mean semantics with fully-flagged
-    fallback. One shuffle of the big table, keyed on the compact
-    (rep, chan_bin, corr) surrogate."""
-    # Both the row -> bin map (one entry per MS row) and the rep -> keys
-    # dim (one entry per output bin) scale with the input: the broadcast
-    # hint is SIZE-GATED by one planning count (the reference's eager
-    # plan-pass analogue, chunking.py:281-285). Small -> hinted
-    # single-shuffle plan; at 100 TB -> plain joins, AQE decides.
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
-    narrow = bins.select("row_id", "rep", "chan_fac")
-    dim = bins.select("rep", *BIN_KEYS).distinct()
-    if fits:
-        narrow, dim = F.broadcast(narrow), F.broadcast(dim)
-    j = vis.join(narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.col("chan_fac")).cast("int")
-    )
-    fl, w = F.col("flag"), F.col("weight_sp")
-    s = F.col("sigma_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
-
-    sum_w = F.when(n_unfl > 0, F.sum(F.when(~fl, w))).otherwise(F.sum(w))
-    sum_w2s2 = F.when(n_unfl > 0, F.sum(F.when(~fl, w * w * s * s))).otherwise(
-        F.sum(w * w * s * s)
-    )
-    agg = j.groupBy("rep", "chan_bin", "corr").agg(
-        wmean(F.col("vis_re")).alias("vis_re"),
-        wmean(F.col("vis_im")).alias("vis_im"),
-        F.bool_and(fl).alias("flag"),
-        sum_w.alias("weight_sp"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("sigma_sp"),
-        F.count("*").alias("n_samples"),
-    )
-    head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
-    return agg.join(dim, "rep").select(  # dim already hint-wrapped above
-        *head,
-        "chan_bin",
-        "corr",
-        "vis_re",
-        "vis_im",
-        "flag",
-        "weight_sp",
-        "sigma_sp",
-        "n_samples",
-    )
 
 
 def spw_grid(params: DataFrame, tables: dict) -> DataFrame:
@@ -384,6 +316,47 @@ def ddid_map(params: DataFrame, tables: dict) -> DataFrame:
     )
 
 
+def plan_bda(
+    tables: dict,
+    decorrelation: float,
+    max_fov: float,
+    time_bin_secs: float,
+    min_nchan: int,
+    fields,
+    scans,
+) -> DataFrame:
+    """Planning step: the cut — one eager localCheckpoint of the
+    selected, BDA-binned row table with ``rep`` attached ("Scale design"
+    in the module docstring)."""
+    rows = select_rows(tables["ms_rows"], fields, scans)
+    params = bin_params(
+        rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
+    )
+    return with_rep(assign_bins(rows, params)).localCheckpoint(eager=True)
+
+
+def assemble_bda(tables: dict, cut: DataFrame, vis: DataFrame) -> dict:
+    """Assembly step: the output tables from the cut and the averaged
+    visibility table ``vis`` (average_vis(..., keep_rep=True) form).
+    Every params group has rows, so the cut's channelisations are
+    exactly the set params yields."""
+    dmap = ddid_map(cut.select("DATA_DESC_ID", "out_nchan"), tables)
+    dmap = dmap.localCheckpoint(eager=True)
+    grid = spw_grid(dmap, tables).localCheckpoint(eager=True)
+    remapped = _remap_rows(average_rows(cut, with_row_id=True), dmap)
+    rewritten = {
+        "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"
+    }
+    return {
+        "ms_rows": remap_main(remapped),
+        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis),
+        "spw": grid,
+        "ddid_map": dmap,
+        **conformant_subtables(dmap, grid),
+        **{k: v for k, v in tables.items() if k not in rewritten},
+    }
+
+
 def bda(
     tables: dict,
     decorrelation: float = 0.95,
@@ -404,45 +377,11 @@ def bda(
     uniform grids. The ragged-specific ``spw``/``ddid_map`` views are
     kept alongside for lineage. Unknown subtables pass through
     (subtables.py:9-37)."""
-    rows = tables["ms_rows"]
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    params = bin_params(
-        rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
+    cut = plan_bda(
+        tables, decorrelation, max_fov, time_bin_secs, min_nchan, fields, scans
     )
-    # One materialized cut of the binned rows serves every table below
-    # ("Scale design" in the module docstring). Every params group has
-    # rows, so the cut's channelisations are exactly the set params yields.
-    cut = with_rep(assign_bins(rows, params)).localCheckpoint(eager=True)
-    dmap = ddid_map(cut.select("DATA_DESC_ID", "out_nchan"), tables)
-    dmap = dmap.localCheckpoint(eager=True)
-    grid = spw_grid(dmap, tables).localCheckpoint(eager=True)
-    bins = cut.select(*BIN_MAP_COLS)
-    remapped = _remap_rows(average_rows(cut, with_row_id=True), dmap)
-    rewritten = {
-        "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"
-    }
-    out_weights = None
-    if "ms_weights" in tables:
-        out_weights = (
-            average_weights(tables["ms_weights"], bins, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-        )
-    return {
-        "ms_rows": remap_main(remapped),
-        **({"ms_weights": out_weights} if out_weights is not None else {}),
-        "ms_vis": (
-            average_vis(tables["ms_vis"], bins, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-            .withColumnRenamed("chan_bin", "chan")
-        ),
-        "spw": grid,
-        "ddid_map": dmap,
-        **conformant_subtables(dmap, grid),
-        **{k: v for k, v in tables.items() if k not in rewritten},
-    }
+    vis = average_vis(tables["ms_vis"], cut.select(*BIN_MAP_COLS), keep_rep=True)
+    return assemble_bda(tables, cut, vis)
 
 
 def remap_main(remapped: DataFrame) -> DataFrame:

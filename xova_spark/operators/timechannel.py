@@ -1,4 +1,5 @@
-"""Fixed time-and-channel averaging — the reference's primary pipeline.
+"""Fixed time-and-channel averaging — the reference's primary pipeline,
+and the one home of the A1a averaging contract both pipelines share.
 
 Re-expresses ``xova timechannel`` (reference: xova/apps/xova/averaging.py
 :184-267, kernel call :251-255; CLI defaults arguments.py:127-132) as pure
@@ -23,6 +24,16 @@ codex-africanus time_and_channel contract the reference delegates to):
   falling back to the flagged samples when the output bin is fully
   flagged; FLAG out = all inputs flagged (averaging.py:225 convention).
 
+That contract is written once, here, and bda.py and streaming/ use it:
+``row_aggs`` (the row columns), ``vis_partials`` (the eleven
+decomposable sums of one (rep, chan_bin, corr) group) with
+``vis_columns`` (the weighted-mean-with-fallback projection over them),
+and one ``average_vis`` whose channel divisor is the bin map's
+per-baseline ``chan_fac`` for BDA and the constant ``chan_bin_size``
+here. A batch aggregate projects straight over the eleven aggregate
+expressions; the stream stores them, merges them per micro-batch and
+projects at drain (streaming/materialize.py).
+
 Scale design: the row aggregation is one shuffle keyed on
 (partition, baseline) — the min-TIME window and the subsequent groupBy
 share that hash partitioning (HashPartitioning on a key subset satisfies
@@ -31,22 +42,24 @@ vis aggregation joins the big samples table to the (row_id -> bin) map —
 broadcast when small, AQE shuffle-join otherwise — then aggregates in a
 single shuffle. Skewed baselines are handled by AQE skew-join splitting.
 
-The full pipeline, ``timechannel()``, writes each table as its own
-action; left lazy, each would replay the row-side plan (FLAG_ROW
-derivation, the min-TIME window, the rep window) from the scans. So it
-takes ONE cut: an eager ``localCheckpoint`` of the binned row table with
-``rep`` attached (row-scale, far below the visibility table). ms_rows
-aggregates it directly and the weights/vis bin map is a plain select of
-it. A checkpoint, not ``persist``: it is not matched by plan in the
-session's cache manager, so nothing outlives the command. The component
-functions (assign_time_bins, bin_map, average_rows, average_*) stay
-lazy for the registry entries, whose oracles and plan audits check the
-composed single plans.
+The full pipeline, ``timechannel()``, is two steps around the
+visibility aggregate. ``plan_timechannel`` takes ONE cut: an eager
+``localCheckpoint`` of the binned row table with ``rep`` attached
+(row-scale, far below the visibility table); left lazy, every written
+table would replay the row-side plan (FLAG_ROW derivation, the min-TIME
+window, the rep window) from the scans. ``assemble_timechannel`` builds
+the output tables from the cut and an averaged visibility table: ms_rows
+aggregates the cut and the weights bin map is a plain select of it.
+``xova-spark stream`` calls the same two steps and hands the assembly
+its drained stream partials instead of ``average_vis``. A checkpoint,
+not ``persist``: it is not matched by plan in the session's cache
+manager, so nothing outlives the command. The component functions
+(assign_time_bins, bin_map, average_rows, average_*) stay lazy for the
+registry entries, whose oracles and plan audits check the composed
+single plans.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -55,6 +68,8 @@ PART_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER"]  # app.py:43 GROUP_COLS
 BL_KEYS = ["ANTENNA1", "ANTENNA2"]
 BIN_KEYS = PART_KEYS + BL_KEYS + ["time_bin"]
 BIN_MAP_COLS = ("row_id", "rep", *BIN_KEYS, "FLAG_ROW")
+VIS_KEYS = ["rep", "chan_bin", "corr"]
+VIS_COLS = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
 
 # Size gate for broadcasting the row -> bin map: ~64 bytes/row serialized,
 # so 4M rows ~ 256 MB build side — comfortably under executor memory on
@@ -101,9 +116,7 @@ def map_fits_broadcast(df: DataFrame, limit_rows: int | None = None) -> bool:
     100 TB plans hint-free. The full pipelines hand in a bin map cut
     from one materialized row table, so their counts are short jobs."""
     if limit_rows is None:
-        limit_rows = int(
-            os.environ.get("XOVA_MAP_BROADCAST_ROWS", DEFAULT_MAP_BROADCAST_ROWS)
-        )
+        limit_rows = DEFAULT_MAP_BROADCAST_ROWS
     if limit_rows <= 0:
         return False
     try:
@@ -119,6 +132,97 @@ def _fallback(unflagged_expr, all_expr):
     """Aggregate over unflagged rows, falling back to all rows when the
     bin is fully flagged (null unflagged aggregate)."""
     return F.coalesce(unflagged_expr, all_expr)
+
+
+def _sums(name: str, unfl, x) -> dict:
+    """``x`` summed over the unflagged set (``<name>_u``) and over all
+    (``<name>_a``): the pair every A1a fallback picks from."""
+    return {f"{name}_u": F.sum(F.when(unfl, x)), f"{name}_a": F.sum(x)}
+
+
+def _weight_sums(unfl, w, s) -> dict:
+    """sum(w) and sum(w²σ²) pairs: the decomposable half of the A1a
+    WEIGHT / SIGMA (weighted RMS) columns, per row or per sample."""
+    return {**_sums("sw", unfl, w), **_sums("sw2s2", unfl, w * w * s * s)}
+
+
+def row_aggs() -> list:
+    """The A1a row columns of one output bin (ref averaging.py:184-267):
+    TIME mean and INTERVAL sum over all rows; EXPOSURE sum,
+    EXPOSURE-weighted TIME_CENTROID and UVW means over the unflagged
+    rows, each falling back to all rows when the bin is fully flagged;
+    FLAG_ROW = every row flagged. Callers add their own counts and
+    pass-through columns."""
+    fr = F.col("FLAG_ROW")
+    unfl = ~fr
+    return [
+        F.avg("TIME").alias("TIME"),
+        F.sum("INTERVAL").alias("INTERVAL"),
+        _fallback(
+            F.sum(F.when(unfl, F.col("EXPOSURE"))), F.sum("EXPOSURE")
+        ).alias("EXPOSURE"),
+        _fallback(
+            F.sum(F.when(unfl, F.col("EXPOSURE") * F.col("TIME_CENTROID")))
+            / F.sum(F.when(unfl, F.col("EXPOSURE"))),
+            F.sum(F.col("EXPOSURE") * F.col("TIME_CENTROID")) / F.sum("EXPOSURE"),
+        ).alias("TIME_CENTROID"),
+        *[
+            _fallback(F.avg(F.when(unfl, F.col(c))), F.avg(F.col(c))).alias(c)
+            for c in ("u", "v", "w")
+        ],
+        F.bool_and(fr).alias("FLAG_ROW"),
+    ]
+
+
+def vis_partials() -> dict:
+    """The eleven decomposable partial sums of one visibility group
+    (name -> aggregate over its samples): sample counts, the weight,
+    weighted-visibility and w²σ² sums over the unflagged and over all
+    samples, and the all-flagged AND. Every one merges across
+    micro-batches by plain sum, or AND for ``flag_all``."""
+    fl, w = F.col("flag"), F.col("weight_sp")
+    unfl = ~fl
+    return {
+        "n": F.count("*"),
+        "n_unfl": F.count(F.when(unfl, F.lit(1))),
+        **_sums("swre", unfl, w * F.col("vis_re")),
+        **_sums("swim", unfl, w * F.col("vis_im")),
+        **_weight_sums(unfl, w, F.col("sigma_sp")),
+        "flag_all": F.bool_and(fl),
+    }
+
+
+def vis_columns(p: dict) -> dict:
+    """The A1a averaged visibility columns (name -> aliased column),
+    projected from the partials ``p`` (name -> column: the aggregates
+    of vis_partials in one groupBy, or the merged stored sums):
+    weighted means over the unflagged samples, over all samples when
+    the group is fully flagged; FLAG = every sample flagged."""
+    has_u = p["n_unfl"] > 0
+
+    def pick(name):
+        return F.when(has_u, p[f"{name}_u"]).otherwise(p[f"{name}_a"])
+
+    sw = pick("sw")
+    cols = {
+        "vis_re": pick("swre") / sw,
+        "vis_im": pick("swim") / sw,
+        "flag": p["flag_all"],
+        "weight_sp": sw,
+        "sigma_sp": F.sqrt(pick("sw2s2")) / sw,
+        "n_samples": p["n"],
+    }
+    return {k: c.alias(k) for k, c in cols.items()}
+
+
+def select_rows(rows: DataFrame, fields, scans) -> DataFrame:
+    """FIELD_ID / SCAN_NUMBER selection (averaging.py:218-221); None or
+    empty selects everything."""
+    if fields:
+        rows = rows.filter(F.col("FIELD_ID").isin(fields))
+    if scans:
+        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
+    return rows
 
 
 def assign_time_bins(rows: DataFrame, time_bin_secs: float) -> DataFrame:
@@ -141,12 +245,9 @@ def average_rows(
     with_row_id: bool = False,
 ) -> DataFrame:
     """A1 row-level averaging (ref averaging.py:184-267)."""
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))  # averaging.py:218-221
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
     return average_binned_rows(
-        assign_time_bins(rows, time_bin_secs), with_row_id=with_row_id
+        assign_time_bins(select_rows(rows, fields, scans), time_bin_secs),
+        with_row_id=with_row_id,
     )
 
 
@@ -160,27 +261,11 @@ def average_binned_rows(binned: DataFrame, with_row_id: bool = False) -> DataFra
     load_ms row-identity contract and can be re-opened, re-checked, and
     re-averaged like any input MS (the reference's average-then-check
     workflow, check.py:22-76)."""
-    fr = F.col("FLAG_ROW")
-    unfl = ~fr
     extra = [F.min("row_id").alias("row_id")] if with_row_id else []
     return binned.groupBy(*BIN_KEYS).agg(
         *extra,
-        F.avg("TIME").alias("TIME"),
-        F.sum("INTERVAL").alias("INTERVAL"),
-        _fallback(
-            F.sum(F.when(unfl, F.col("EXPOSURE"))), F.sum("EXPOSURE")
-        ).alias("EXPOSURE"),
-        _fallback(
-            F.sum(F.when(unfl, F.col("EXPOSURE") * F.col("TIME_CENTROID")))
-            / F.sum(F.when(unfl, F.col("EXPOSURE"))),
-            F.sum(F.col("EXPOSURE") * F.col("TIME_CENTROID")) / F.sum("EXPOSURE"),
-        ).alias("TIME_CENTROID"),
-        *[
-            _fallback(F.avg(F.when(unfl, F.col(c))), F.avg(F.col(c))).alias(c)
-            for c in ("u", "v", "w")
-        ],
-        F.bool_and(fr).alias("FLAG_ROW"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unflagged"),
+        *row_aggs(),
+        F.count(F.when(~F.col("FLAG_ROW"), F.lit(1))).alias("n_unflagged"),
         F.count("*").alias("n_rows"),
         # Constant ID columns pass through (ref averaging.py:117-136).
         *[
@@ -241,17 +326,28 @@ def average_weights(
     fits = map_fits_broadcast(bins, map_broadcast_rows)
     narrow = bins.select("row_id", "rep", "FLAG_ROW")
     j = weights.join(F.broadcast(narrow) if fits else narrow, "row_id")
-    unfl = ~F.col("FLAG_ROW")
-    w, s = F.col("WEIGHT"), F.col("SIGMA")
-    sum_w = _fallback(F.sum(F.when(unfl, w)), F.sum(w))
-    sum_w2s2 = _fallback(
-        F.sum(F.when(unfl, w * w * s * s)), F.sum(w * w * s * s)
-    )
+    p = _weight_sums(~F.col("FLAG_ROW"), F.col("WEIGHT"), F.col("SIGMA"))
+    sum_w = _fallback(p["sw_u"], p["sw_a"])
     agg = j.groupBy("rep", "corr").agg(
         sum_w.alias("WEIGHT"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("SIGMA"),
+        (F.sqrt(_fallback(p["sw2s2_u"], p["sw2s2_a"])) / sum_w).alias("SIGMA"),
     )
     return _reattach(agg, bins, ["corr", "WEIGHT", "SIGMA"], keep_rep, fits)
+
+
+def bin_samples(
+    vis: DataFrame, bins: DataFrame, chan_bin_size: int, hint: bool
+) -> DataFrame:
+    """Join the samples to the row -> bin map's ``rep`` and add
+    chan_bin = floor(chan / divisor): the map's per-baseline
+    ``chan_fac`` when it carries one (BDA's ragged channels), else the
+    constant ``chan_bin_size``. ``hint`` broadcasts the map side."""
+    ragged = "chan_fac" in bins.columns
+    narrow = bins.select("row_id", "rep", *(["chan_fac"] if ragged else []))
+    div = F.col("chan_fac") if ragged else F.lit(chan_bin_size)
+    return vis.join(F.broadcast(narrow) if hint else narrow, "row_id").withColumn(
+        "chan_bin", F.floor(F.col("chan") / div).cast("int")
+    )
 
 
 def average_vis(
@@ -259,45 +355,34 @@ def average_vis(
     keep_rep: bool = False,
     map_broadcast_rows: int | None = None,
 ) -> DataFrame:
-    """Visibility averaging per (bin, chan_bin, corr): weighted complex
-    mean over unflagged samples with fully-flagged fallback (A1/A1a).
-    One shuffle of the big table, keyed on (rep, chan_bin, corr).
-    The row -> bin map join is size-gated (see average_weights); one
-    planning count covers both the map and dim sides."""
+    """Visibility averaging per (bin, chan_bin, corr), for both
+    pipelines: weighted complex mean over unflagged samples with
+    fully-flagged fallback (A1/A1a). One shuffle of the big table,
+    keyed on the compact (rep, chan_bin, corr) surrogate; the channel
+    bins are BDA's ragged ones when ``bins`` carries chan_fac
+    (bin_samples). The row -> bin map join is size-gated (see
+    average_weights); one planning count covers both the map and dim
+    sides."""
     fits = map_fits_broadcast(bins, map_broadcast_rows)
-    narrow = bins.select("row_id", "rep")
-    j = vis.join(F.broadcast(narrow) if fits else narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
+    agg = (
+        bin_samples(vis, bins, chan_bin_size, fits)
+        .groupBy(*VIS_KEYS)
+        .agg(*vis_columns(vis_partials()).values())
     )
-    fl, w = F.col("flag"), F.col("weight_sp")
-    re, im, s = F.col("vis_re"), F.col("vis_im"), F.col("sigma_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-    # Weighted means over the unflagged set, else over the flagged set.
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
+    return _reattach(agg, bins, ["chan_bin", "corr", *VIS_COLS], keep_rep, fits)
 
-    sum_w = F.when(n_unfl > 0, F.sum(F.when(~fl, w))).otherwise(F.sum(w))
-    sum_w2s2 = F.when(n_unfl > 0, F.sum(F.when(~fl, w * w * s * s))).otherwise(
-        F.sum(w * w * s * s)
-    )
-    agg = j.groupBy("rep", "chan_bin", "corr").agg(
-        wmean(re).alias("vis_re"),
-        wmean(im).alias("vis_im"),
-        F.bool_and(fl).alias("flag"),
-        sum_w.alias("weight_sp"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("sigma_sp"),
-        F.count("*").alias("n_samples"),
-    )
-    return _reattach(
-        agg,
-        bins,
-        ["chan_bin", "corr", "vis_re", "vis_im", "flag", "weight_sp",
-         "sigma_sp", "n_samples"],
-        keep_rep,
-        fits,
-    )
+
+def sample_tables(tables: dict, bins: DataFrame, vis: DataFrame) -> dict:
+    """ms_weights (when the input has one) and ms_vis under the output
+    contract: row_id = the bin's rep, chan = the channel bin. ``vis`` is
+    average_vis(..., keep_rep=True) or its stream-drained twin."""
+    out = {}
+    if "ms_weights" in tables:
+        out["ms_weights"] = average_weights(
+            tables["ms_weights"], bins, keep_rep=True
+        ).withColumnRenamed("rep", "row_id")
+    out["ms_vis"] = vis.withColumnsRenamed({"rep": "row_id", "chan_bin": "chan"})
+    return out
 
 
 def average_spw(
@@ -333,6 +418,37 @@ def average_spw(
     return out_chans, out_meta
 
 
+def plan_timechannel(
+    tables: dict, time_bin_secs: float, fields, scans
+) -> DataFrame:
+    """Planning step: the cut — one eager localCheckpoint of the
+    selected, time-binned row table with ``rep`` attached ("Scale
+    design" in the module docstring)."""
+    rows = select_rows(tables["ms_rows"], fields, scans)
+    return with_rep(assign_time_bins(rows, time_bin_secs)).localCheckpoint(
+        eager=True
+    )
+
+
+def assemble_timechannel(
+    tables: dict, cut: DataFrame, vis: DataFrame, chan_bin_size: int
+) -> dict:
+    """Assembly step: the output tables from the cut and the averaged
+    visibility table ``vis`` (average_vis(..., keep_rep=True) form)."""
+    out_chans, out_meta = average_spw(
+        tables["spw_chans"], tables["spw_meta"], chan_bin_size
+    )
+    rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
+    return {
+        "ms_rows": average_binned_rows(cut, with_row_id=True),
+        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis),
+        "spw_chans": out_chans,
+        "spw_meta": out_meta,
+        # S10 passthrough: every other table (known or unknown) verbatim.
+        **{k: v for k, v in tables.items() if k not in rewritten},
+    }
+
+
 def timechannel(
     tables: dict,
     time_bin_secs: float = 2.0,
@@ -351,34 +467,8 @@ def timechannel(
     not rewritten by the pipeline pass through unchanged, including ones
     this engine knows nothing about (ref subtables.py:9-37 copies
     unknown subtables wholesale)."""
-    rows = tables["ms_rows"]
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    # One materialized cut of the binned rows serves every table below
-    # ("Scale design" in the module docstring).
-    cut = with_rep(assign_time_bins(rows, time_bin_secs)).localCheckpoint(
-        eager=True
+    cut = plan_timechannel(tables, time_bin_secs, fields, scans)
+    vis = average_vis(
+        tables["ms_vis"], cut.select(*BIN_MAP_COLS), chan_bin_size, keep_rep=True
     )
-    bins = cut.select(*BIN_MAP_COLS)
-    out_chans, out_meta = average_spw(
-        tables["spw_chans"], tables["spw_meta"], chan_bin_size
-    )
-    rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
-    return {
-        "ms_rows": average_binned_rows(cut, with_row_id=True),
-        "ms_weights": (
-            average_weights(tables["ms_weights"], bins, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-        ),
-        "ms_vis": (
-            average_vis(tables["ms_vis"], bins, chan_bin_size, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-            .withColumnRenamed("chan_bin", "chan")
-        ),
-        "spw_chans": out_chans,
-        "spw_meta": out_meta,
-        # S10 passthrough: every other table (known or unknown) verbatim.
-        **{k: v for k, v in tables.items() if k not in rewritten},
-    }
+    return assemble_timechannel(tables, cut, vis, chan_bin_size)

@@ -906,16 +906,15 @@ def stream_expectations_monitor(spark, sf_dir):
     from pyspark.sql import functions as FF
 
     from xova_spark.queries.relational import load_tables
+    from xova_spark.streaming.materialize import merge_batch
 
     load_tables(spark, sf_dir, ("events",))
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts", F.to_utc_timestamp(F.col("ts"), "UTC")
     )
     out_dir = tempfile.mkdtemp(prefix="xova_dq_monitor_")
-    cur = os.path.join(out_dir, "current")
 
-    def monitor(batch_df, _bid):
-        sp = batch_df.sparkSession
+    def monitor(batch_df, bid):
         outs = []
         for name, pred in _EV_EXPECTATIONS:
             outs.append(
@@ -929,24 +928,10 @@ def stream_expectations_monitor(spark, sf_dir):
         partial = outs[0]
         for o in outs[1:]:
             partial = partial.unionAll(o)
-        if os.path.exists(cur):
-            partial = (
-                sp.read.parquet(cur)
-                .unionByName(partial)
-                .groupBy("expectation")
-                .agg(
-                    FF.sum("n_rows").alias("n_rows"),
-                    FF.sum("n_violations").alias("n_violations"),
-                )
-            )
-        tmp = os.path.join(out_dir, "_staged")
-        partial.write.mode("overwrite").parquet(tmp)
-        swap = os.path.join(out_dir, "_old")
-        if os.path.exists(cur):
-            os.rename(cur, swap)
-        os.rename(tmp, cur)
-        if os.path.exists(swap):
-            shutil.rmtree(swap)
+        merge_batch(bid, out_dir, partial, ["expectation"], [
+            FF.sum("n_rows").alias("n_rows"),
+            FF.sum("n_violations").alias("n_violations"),
+        ])
 
     ckpt = tempfile.mkdtemp(prefix="xova_ckpt_dqmon_")
     try:
@@ -957,7 +942,7 @@ def stream_expectations_monitor(spark, sf_dir):
             .start()
         )
         q_.awaitTermination()
-        rows = spark.read.parquet(cur).collect()
+        rows = spark.read.parquet(os.path.join(out_dir, "current")).collect()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -47,6 +47,14 @@ class OutputExistsError(RuntimeError):
     pass
 
 
+def check_writable(path: str, force: bool) -> None:
+    """Refuse an existing output unless force (app.py:152-159)."""
+    if os.path.exists(path) and not force:
+        raise OutputExistsError(
+            f"{path} exists. Use force=True to overwrite (ref --force)."
+        )
+
+
 def write_ms(tables: dict, path: str, force: bool = False) -> dict:
     """S8/S9/S10/S11: write every DataFrame in ``tables`` under
     ``path``; refuse to overwrite unless force (app.py:152-159).
@@ -56,11 +64,7 @@ def write_ms(tables: dict, path: str, force: bool = False) -> dict:
     is persisted as ``<path>/_keywords.json`` — the parquet-layout
     analogue of the reference's table-keyword relink on passthrough
     subtables (subtables.py:35 putkeywords); load_ms restores it."""
-    if os.path.exists(path):
-        if not force:
-            raise OutputExistsError(
-                f"{path} exists. Use force=True to overwrite (ref --force)."
-            )
+    check_writable(path, force)
     mode = "overwrite" if force else "errorifexists"
     schemas: dict[str, str] = {}
     secs: dict[str, float] = {}

@@ -8,6 +8,20 @@ the stored table always holds the rollup of everything consumed so far,
 and merging partials is valid because the aggregates carried are
 decomposable (count/sum pairs; averages derive at read time).
 
+Every store here (and the streaming registry entries' own stores) goes
+through one merge, ``merge_batch``: read ``current``, union the batch's
+partials, re-aggregate, write ``_staged``, then swap it in (``current``
+-> ``_old``, ``_staged`` -> ``current``, drop ``_old``). Replay rule:
+foreachBatch is at-least-once — after a restart Spark re-runs a batch
+that was swapped in but never committed to the checkpoint, with the
+same ``batch_id``. The id of the last merged batch is stored inside the
+staged directory, so it swaps together with the data, and a batch whose
+id is not newer is skipped. A crash between the two renames leaves
+``_old`` without ``current``; the next merge restores ``_old`` rather
+than starting from empty. A store written under one checkpoint only
+merges batches of that checkpoint's query: a fresh checkpoint restarts
+the ids at 0.
+
 At real scale the overwrite becomes a transactional MERGE into a table
 format with commit semantics (Delta/Iceberg); the plan shape — batch
 partial agg, key-join merge, atomic swap — is identical.
@@ -16,50 +30,82 @@ partial agg, key-join merge, atomic swap — is identical.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xova_spark.operators import timechannel as tc
+
+_BATCH_ID_FILE = "_batch_id"  # leading "_": the parquet reader skips it
+
+
+def _last_batch_id(cur: str) -> int:
+    try:
+        with open(os.path.join(cur, _BATCH_ID_FILE)) as fh:
+            return int(fh.read())
+    except FileNotFoundError:
+        return -1
+
+
+def merge_batch(
+    batch_id: int, out_dir: str, partial: DataFrame, keys: list[str], merge_aggs
+) -> None:
+    """Merge one micro-batch's ``partial`` into ``<out_dir>/current``:
+    re-aggregate the union on ``keys`` with ``merge_aggs``, stage, swap
+    (the replay rule in the module docstring)."""
+    cur, tmp, old = (os.path.join(out_dir, d) for d in ("current", "_staged", "_old"))
+    if os.path.exists(old):
+        if os.path.exists(cur):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, cur)
+    merged = partial
+    if os.path.exists(cur):
+        if batch_id <= _last_batch_id(cur):
+            return
+        merged = (
+            partial.sparkSession.read.parquet(cur)
+            .unionByName(partial)
+            .groupBy(*keys)
+            .agg(*merge_aggs)
+        )
+    # stage-then-swap: the reader never sees a half-written rollup
+    merged.write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, _BATCH_ID_FILE), "w") as fh:
+        fh.write(str(batch_id))
+    if os.path.exists(cur):
+        os.rename(cur, old)
+    os.rename(tmp, cur)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _start(stream_df: DataFrame, checkpoint: str, on_batch):
+    """Start ``on_batch(batch_df, batch_id)`` as an availableNow
+    foreachBatch query; returns the handle."""
+    return (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
 
 def _merge_into(batch_df: DataFrame, batch_id: int, out_dir: str, keys: list[str]):
-    spark = batch_df.sparkSession
     partial = batch_df.groupBy(*keys).agg(
         F.count("*").alias("n"), F.sum("value").alias("total")
     )
-    tmp = os.path.join(out_dir, "_staged")
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        existing = spark.read.parquet(cur)
-        merged = (
-            existing.unionByName(partial)
-            .groupBy(*keys)
-            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-        )
-    else:
-        merged = partial
-    # stage-then-swap: the reader never sees a half-written rollup
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
+    merge_batch(batch_id, out_dir, partial, keys,
+                [F.sum("n").alias("n"), F.sum("total").alias("total")])
 
 
 def materialized_rollup(
     stream_df: DataFrame, out_dir: str, keys: list[str], checkpoint: str
 ):
     """Start the maintenance query (availableNow); returns the handle."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: _merge_into(df, bid, out_dir, keys)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, checkpoint, lambda df, bid: _merge_into(df, bid, out_dir, keys)
     )
 
 
@@ -70,71 +116,27 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming MS maintenance: the averaging pipeline as a continuously
 # materialized output MS. Each micro-batch of visibility samples merges
-# DECOMPOSABLE A1a partials (count/sum pairs per component; flag merged
-# by AND) into the stored table; the final averaged columns — weighted
-# means with the fully-flagged fallback — derive at read time from the
-# partials. This is the reference's write path (app.py:107-116) turned
-# into incremental maintenance the batch engine cannot express.
-
-_VIS_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
-             "time_bin", "chan_bin", "corr"]
-
-
-def _vis_partials(vis: DataFrame, bins: DataFrame, chan_bin_size: int) -> DataFrame:
-    """Per-(bin, chan_bin, corr) decomposable partials of the A1a
-    visibility aggregation (operators/timechannel.average_vis):
-    everything here merges by plain sum / AND across micro-batches."""
-    j = vis.join(bins, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
-    )
-    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
-    unfl = ~fl
-    return j.groupBy(*_VIS_KEYS).agg(
-        F.count("*").alias("n"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
-        F.sum(F.when(unfl, w)).alias("sw_u"),
-        F.sum(F.when(unfl, w * F.col("vis_re"))).alias("swre_u"),
-        F.sum(F.when(unfl, w * F.col("vis_im"))).alias("swim_u"),
-        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
-        F.sum(w).alias("sw_a"),
-        F.sum(w * F.col("vis_re")).alias("swre_a"),
-        F.sum(w * F.col("vis_im")).alias("swim_a"),
-        F.sum(w * w * s * s).alias("sw2s2_a"),
-        F.bool_and(fl).alias("flag_all"),
-    )
-
-
-_PARTIAL_SUMS = ["n", "n_unfl", "sw_u", "swre_u", "swim_u", "sw2s2_u",
-                 "sw_a", "swre_a", "swim_a", "sw2s2_a"]
+# the A1a visibility partials (timechannel.vis_partials, keyed on
+# (rep, chan_bin, corr) for both pipelines: the bin map's chan_fac gives
+# BDA its ragged channel bins) into the stored table; the averaged
+# columns — weighted means with the fully-flagged fallback — derive at
+# read time from the merged partials. This is the reference's write path
+# (app.py:107-116) turned into incremental maintenance the batch engine
+# cannot express.
 
 
 def _merge_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
                     bins: DataFrame, chan_bin_size: int):
-    spark = batch_df.sparkSession
-    partial = _vis_partials(batch_df, bins, chan_bin_size)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_VIS_KEYS)
-            .agg(
-                *[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
-                F.bool_and("flag_all").alias("flag_all"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
+    partials = tc.vis_partials()
+    partial = (
+        tc.bin_samples(batch_df, bins, chan_bin_size, False)
+        .groupBy(*tc.VIS_KEYS)
+        .agg(*[c.alias(k) for k, c in partials.items()])
+    )
+    merge_aggs = [
+        (F.bool_and(k) if k == "flag_all" else F.sum(k)).alias(k) for k in partials
+    ]
+    merge_batch(batch_id, out_dir, partial, tc.VIS_KEYS, merge_aggs)
 
 
 def materialized_ms_vis(
@@ -145,149 +147,28 @@ def materialized_ms_vis(
     chan_bin_size: int = 16,
 ):
     """Start the MS-maintenance query (availableNow): every arriving
-    visibility file merges into the averaged output table."""
-    return (
-        vis_stream.writeStream.foreachBatch(
-            lambda df, bid: _merge_vis_into(df, bid, out_dir, bins, chan_bin_size)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    visibility file merges into the partial store. ``bins`` is either
+    pipeline's bin map (``chan_bin_size`` is unused when it carries
+    BDA's chan_fac)."""
+    return _start(
+        vis_stream,
+        checkpoint,
+        lambda df, bid: _merge_vis_into(df, bid, out_dir, bins, chan_bin_size),
     )
 
 
-def finalize_vis(spark, out_dir: str) -> DataFrame:
-    """Derive the A1a averaged columns from the stored partials — the
-    same weighted-mean-with-fallback expressions as the batch
-    average_vis, evaluated over merged sums instead of raw samples."""
+def finalize_vis(spark, out_dir: str, bins: DataFrame) -> DataFrame:
+    """Project the A1a averaged columns from the stored partials and
+    re-attach the wide bin keys: the table
+    ``timechannel.average_vis(..., keep_rep=True)`` returns for the same
+    samples and bin map."""
     p = spark.read.parquet(os.path.join(out_dir, "current"))
-    has_u = F.col("n_unfl") > 0
-
-    def pick(u, a):
-        return F.when(has_u, F.col(u)).otherwise(F.col(a))
-
-    sw = pick("sw_u", "sw_a")
-    return p.select(
-        *_VIS_KEYS,
-        (pick("swre_u", "swre_a") / sw).alias("vis_re"),
-        (pick("swim_u", "swim_a") / sw).alias("vis_im"),
-        F.col("flag_all").alias("flag"),
-        sw.alias("weight_sp"),
-        (F.sqrt(pick("sw2s2_u", "sw2s2_a")) / sw).alias("sigma_sp"),
-        F.col("n").alias("n_samples"),
-    )
-
-
-# --- BDA maintenance: same partial-merge machinery, ragged bins ---------
-
-_BDA_KEYS = ["rep", "chan_bin", "corr"]
-
-
-def _bda_vis_partials(vis: DataFrame, bins: DataFrame) -> DataFrame:
-    """BDA twin of _vis_partials: the chan_bin width varies per baseline
-    (chan_fac from the bin map) and grouping keys on the compact
-    (rep, chan_bin, corr) surrogate (operators/bda.average_vis)."""
-    narrow = bins.select("row_id", "rep", "chan_fac")
-    j = vis.join(narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.col("chan_fac")).cast("int")
-    )
-    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
-    unfl = ~fl
-    return j.groupBy(*_BDA_KEYS).agg(
-        F.count("*").alias("n"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
-        F.sum(F.when(unfl, w)).alias("sw_u"),
-        F.sum(F.when(unfl, w * F.col("vis_re"))).alias("swre_u"),
-        F.sum(F.when(unfl, w * F.col("vis_im"))).alias("swim_u"),
-        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
-        F.sum(w).alias("sw_a"),
-        F.sum(w * F.col("vis_re")).alias("swre_a"),
-        F.sum(w * F.col("vis_im")).alias("swim_a"),
-        F.sum(w * w * s * s).alias("sw2s2_a"),
-        F.bool_and(fl).alias("flag_all"),
-    )
-
-
-def _merge_bda_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
-                        bins: DataFrame):
-    spark = batch_df.sparkSession
-    partial = _bda_vis_partials(batch_df, bins)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_BDA_KEYS)
-            .agg(
-                *[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
-                F.bool_and("flag_all").alias("flag_all"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
-
-
-def materialized_bda_vis(
-    vis_stream: DataFrame,
-    bins: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-):
-    """Start the BDA MS-maintenance query (availableNow): every arriving
-    visibility file merges into the ragged-binned partial store."""
-    return (
-        vis_stream.writeStream.foreachBatch(
-            lambda df, bid: _merge_bda_vis_into(df, bid, out_dir, bins)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def finalize_bda_vis(spark, out_dir: str, bins: DataFrame) -> DataFrame:
-    """Derive the A1a averaged columns from merged BDA partials and
-    re-attach the wide bin keys by broadcast dim join — the streamed
-    twin of operators/bda.average_vis (same output schema)."""
-    from xova_spark.operators.timechannel import BIN_KEYS
-
-    p = spark.read.parquet(os.path.join(out_dir, "current"))
-    has_u = F.col("n_unfl") > 0
-
-    def pick(u, a):
-        return F.when(has_u, F.col(u)).otherwise(F.col(a))
-
-    sw = pick("sw_u", "sw_a")
-    derived = p.select(
-        *_BDA_KEYS,
-        (pick("swre_u", "swre_a") / sw).alias("vis_re"),
-        (pick("swim_u", "swim_a") / sw).alias("vis_im"),
-        F.col("flag_all").alias("flag"),
-        sw.alias("weight_sp"),
-        (F.sqrt(pick("sw2s2_u", "sw2s2_a")) / sw).alias("sigma_sp"),
-        F.col("n").alias("n_samples"),
-    )
-    dim = bins.select("rep", *BIN_KEYS).distinct()
-    return derived.join(dim, "rep").select(
-        *BIN_KEYS,
-        "chan_bin",
-        "corr",
-        "vis_re",
-        "vis_im",
-        "flag",
-        "weight_sp",
-        "sigma_sp",
-        "n_samples",
+    cols = tc.vis_columns({k: F.col(k) for k in tc.vis_partials()})
+    return tc._reattach(
+        p.select(*tc.VIS_KEYS, *cols.values()),
+        bins,
+        ["chan_bin", "corr", *tc.VIS_COLS],
+        keep_rep=True,
     )
 
 
@@ -304,54 +185,25 @@ def finalize_bda_vis(spark, out_dir: str, bins: DataFrame) -> DataFrame:
 _CDC_KEYS = ["user_id", "event_type"]
 
 
-def _cdc_compact_batch(batch_df: DataFrame) -> DataFrame:
+def _cdc_merge_into(batch_df: DataFrame, batch_id: int, out_dir: str):
     ordk = F.struct(F.col("ts"), F.col("event_id"))
-    return batch_df.groupBy(*_CDC_KEYS).agg(
+    partial = batch_df.groupBy(*_CDC_KEYS).agg(
         F.max_by("event_id", ordk).alias("last_event_id"),
         F.max_by("value", ordk).alias("last_value"),
         F.max_by(F.unix_micros("ts"), ordk).alias("last_ts_us"),
         F.count("*").alias("n_versions"),
     )
-
-
-def _cdc_merge_into(batch_df: DataFrame, batch_id: int, out_dir: str):
-    spark = batch_df.sparkSession
-    partial = _cdc_compact_batch(batch_df)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        ordk = F.struct(F.col("last_ts_us"), F.col("last_event_id"))
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_CDC_KEYS)
-            .agg(
-                F.max_by("last_event_id", ordk).alias("last_event_id"),
-                F.max_by("last_value", ordk).alias("last_value"),
-                F.max("last_ts_us").alias("last_ts_us"),
-                F.sum("n_versions").alias("n_versions"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
+    ordk = F.struct(F.col("last_ts_us"), F.col("last_event_id"))
+    merge_batch(batch_id, out_dir, partial, _CDC_KEYS, [
+        F.max_by("last_event_id", ordk).alias("last_event_id"),
+        F.max_by("last_value", ordk).alias("last_value"),
+        F.max("last_ts_us").alias("last_ts_us"),
+        F.sum("n_versions").alias("n_versions"),
+    ])
 
 
 def materialized_cdc_state(stream_df: DataFrame, out_dir: str, checkpoint: str):
     """Start the CDC latest-state maintenance query (availableNow)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: _cdc_merge_into(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, checkpoint, lambda df, bid: _cdc_merge_into(df, bid, out_dir)
     )
