@@ -46,9 +46,11 @@ from __future__ import annotations
 import inspect
 import math
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MARKER = re.compile(
     r"1_000_000|1000000|\* *1e6|permille|_micro|micro_|_ppm|milli|nats"

@@ -35,7 +35,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 import pyarrow as pa  # noqa: E402

@@ -60,9 +60,11 @@ entries, which is why a late-landing entry once shipped unchecked):
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PATTERNS = (
     "Expand",
@@ -127,7 +129,6 @@ def parse_args(argv: list[str]):
 def _select_entries(qs: dict, args) -> dict:
     """Apply --only / --since selection; returns the entries to audit."""
     import inspect
-    import os
     import subprocess
 
     if args.only:
@@ -142,7 +143,7 @@ def _select_entries(qs: dict, args) -> dict:
             ["git", "diff", "--name-only", ref, "--", "."],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
             check=True,
         ).stdout.split()
         if any(
@@ -150,7 +151,7 @@ def _select_entries(qs: dict, args) -> dict:
         ):
             print(f"--since {ref}: shared module changed -> full sweep")
             return qs
-        changed_abs = {os.path.join("/root/repo", c) for c in changed}
+        changed_abs = {os.path.join(ROOT, c) for c in changed}
         sel = {}
         for n, f in qs.items():
             try:
@@ -178,7 +179,6 @@ def _stamp_coverage_plan_line(hits: dict, sf_dir: str) -> None:
     itself: a localCheckpoint-truncated plan hides upstream BNLJs from
     the rendered plan text, so observed may trail the allowlist."""
     import datetime
-    import os
     import re
 
     from xova_spark.plancontract import BNLJ_SURVIVORS, WINDOW_SURVIVORS

@@ -378,9 +378,13 @@ class Application:
 
         if args.command == "check":
             from xova_spark.operators.check import check_ms, check_spw
+            from xova_spark.session import run_concurrently
 
-            bad_rows = check_ms(tables).count()
-            bad_spws = check_spw(tables).count()
+            # Two independent validations: submitted together, they
+            # share the cores instead of queueing behind each other.
+            bad_rows, bad_spws = run_concurrently(
+                spark, [check_ms(tables).count, check_spw(tables).count]
+            )
             print(f"check: {bad_rows} row violations, {bad_spws} SPW violations")
             if bad_rows or bad_spws:
                 raise SystemExit(1)
@@ -442,16 +446,14 @@ class Application:
                 {"vis_re": f"{to_name}_re", "vis_im": f"{to_name}_im"}
             )
 
-        from xova_spark.sources.ms_writer import write_ms
+        from xova_spark.sources.ms_writer import write_ms_spans
 
         t0 = time.perf_counter()
-        secs_by_table = write_ms(out, args.output, force=args.force)
+        spans = write_ms_spans(out, args.output, force=args.force)
         if getattr(args, "profile", None):
             from xova_spark.profiling import write_profile
 
-            write_profile(
-                out, args.profile, time.perf_counter() - t0, secs_by_table
-            )
+            write_profile(out, args.profile, time.perf_counter() - t0, spans)
         return args.output
 
     def _execute_corpus(self) -> str:
@@ -780,6 +782,7 @@ class Application:
         else:
             cut = tc.plan_timechannel(tables, args.time_bin_secs or 2.0, None, None)
             bins = cut.select(*tc.BIN_MAP_COLS)
+        fits = tc.map_fits_broadcast(bins)
 
         vis_dir = args.vis_dir or os.path.join(args.ms, "ms_vis.parquet")
         checkpoint = args.checkpoint or args.output + ".ckpt"
@@ -820,9 +823,11 @@ class Application:
         q.awaitTermination()
         vis = finalize_vis(spark, part_dir, bins)
         if args.mode == "bda":
-            out = B.assemble_bda(tables, cut, vis)
+            out = B.assemble_bda(tables, cut, vis, fits)
         else:
-            out = tc.assemble_timechannel(tables, cut, vis, args.chan_bin_size)
+            out = tc.assemble_timechannel(
+                tables, cut, vis, args.chan_bin_size, fits
+            )
         return self._write(out, tables)
 
 

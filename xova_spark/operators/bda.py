@@ -82,6 +82,7 @@ from xova_spark.operators.timechannel import (
     BL_KEYS,
     PART_KEYS,
     average_vis,
+    map_fits_broadcast,
     row_aggs,
     sample_tables,
     select_rows,
@@ -335,11 +336,14 @@ def plan_bda(
     return with_rep(assign_bins(rows, params)).localCheckpoint(eager=True)
 
 
-def assemble_bda(tables: dict, cut: DataFrame, vis: DataFrame) -> dict:
+def assemble_bda(
+    tables: dict, cut: DataFrame, vis: DataFrame, fits: bool | None = None
+) -> dict:
     """Assembly step: the output tables from the cut and the averaged
-    visibility table ``vis`` (average_vis(..., keep_rep=True) form).
-    Every params group has rows, so the cut's channelisations are
-    exactly the set params yields."""
+    visibility table ``vis`` (average_vis(..., keep_rep=True) form);
+    ``fits`` is the broadcast decision for the cut's bin map. Every
+    params group has rows, so the cut's channelisations are exactly the
+    set params yields."""
     dmap = ddid_map(cut.select("DATA_DESC_ID", "out_nchan"), tables)
     dmap = dmap.localCheckpoint(eager=True)
     grid = spw_grid(dmap, tables).localCheckpoint(eager=True)
@@ -349,7 +353,7 @@ def assemble_bda(tables: dict, cut: DataFrame, vis: DataFrame) -> dict:
     }
     return {
         "ms_rows": remap_main(remapped),
-        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis),
+        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis, fits),
         "spw": grid,
         "ddid_map": dmap,
         **conformant_subtables(dmap, grid),
@@ -380,8 +384,13 @@ def bda(
     cut = plan_bda(
         tables, decorrelation, max_fov, time_bin_secs, min_nchan, fields, scans
     )
-    vis = average_vis(tables["ms_vis"], cut.select(*BIN_MAP_COLS), keep_rep=True)
-    return assemble_bda(tables, cut, vis)
+    bins = cut.select(*BIN_MAP_COLS)
+    # The cut is a checkpoint behind a join, so Catalyst's size estimate
+    # cannot confirm the map fits: decide with one count, for both the
+    # vis and the weights aggregate.
+    fits = map_fits_broadcast(bins)
+    vis = average_vis(tables["ms_vis"], bins, keep_rep=True, fits=fits)
+    return assemble_bda(tables, cut, vis, fits)
 
 
 def remap_main(remapped: DataFrame) -> DataFrame:

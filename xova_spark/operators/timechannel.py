@@ -316,14 +316,18 @@ def average_weights(
     bins: DataFrame,
     keep_rep: bool = False,
     map_broadcast_rows: int | None = None,
+    fits: bool | None = None,
 ) -> DataFrame:
     """WEIGHT/SIGMA per (bin, corr): sum of weights over unflagged rows;
     SIGMA = sqrt(sum(w²σ²))/sum(w) — weighted RMS (A1a).
 
     The row -> bin map has one entry per MS row; its join strategy is
     size-gated by one planning count (planned_broadcast): hinted
-    broadcast when small, AQE's choice at 100 TB."""
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
+    broadcast when small, AQE's choice at 100 TB. ``fits`` is that
+    decision when the caller has already made it for ``bins`` (the full
+    pipelines decide once for both sample tables); None decides here."""
+    if fits is None:
+        fits = map_fits_broadcast(bins, map_broadcast_rows)
     narrow = bins.select("row_id", "rep", "FLAG_ROW")
     j = weights.join(F.broadcast(narrow) if fits else narrow, "row_id")
     p = _weight_sums(~F.col("FLAG_ROW"), F.col("WEIGHT"), F.col("SIGMA"))
@@ -354,6 +358,7 @@ def average_vis(
     vis: DataFrame, bins: DataFrame, chan_bin_size: int = 16,
     keep_rep: bool = False,
     map_broadcast_rows: int | None = None,
+    fits: bool | None = None,
 ) -> DataFrame:
     """Visibility averaging per (bin, chan_bin, corr), for both
     pipelines: weighted complex mean over unflagged samples with
@@ -361,9 +366,10 @@ def average_vis(
     keyed on the compact (rep, chan_bin, corr) surrogate; the channel
     bins are BDA's ragged ones when ``bins`` carries chan_fac
     (bin_samples). The row -> bin map join is size-gated (see
-    average_weights); one planning count covers both the map and dim
-    sides."""
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
+    average_weights, also for ``fits``); one planning decision covers
+    both the map and dim sides."""
+    if fits is None:
+        fits = map_fits_broadcast(bins, map_broadcast_rows)
     agg = (
         bin_samples(vis, bins, chan_bin_size, fits)
         .groupBy(*VIS_KEYS)
@@ -372,14 +378,17 @@ def average_vis(
     return _reattach(agg, bins, ["chan_bin", "corr", *VIS_COLS], keep_rep, fits)
 
 
-def sample_tables(tables: dict, bins: DataFrame, vis: DataFrame) -> dict:
+def sample_tables(
+    tables: dict, bins: DataFrame, vis: DataFrame, fits: bool | None = None
+) -> dict:
     """ms_weights (when the input has one) and ms_vis under the output
     contract: row_id = the bin's rep, chan = the channel bin. ``vis`` is
-    average_vis(..., keep_rep=True) or its stream-drained twin."""
+    average_vis(..., keep_rep=True) or its stream-drained twin; ``fits``
+    is the broadcast decision for ``bins`` (average_weights)."""
     out = {}
     if "ms_weights" in tables:
         out["ms_weights"] = average_weights(
-            tables["ms_weights"], bins, keep_rep=True
+            tables["ms_weights"], bins, keep_rep=True, fits=fits
         ).withColumnRenamed("rep", "row_id")
     out["ms_vis"] = vis.withColumnsRenamed({"rep": "row_id", "chan_bin": "chan"})
     return out
@@ -431,17 +440,22 @@ def plan_timechannel(
 
 
 def assemble_timechannel(
-    tables: dict, cut: DataFrame, vis: DataFrame, chan_bin_size: int
+    tables: dict,
+    cut: DataFrame,
+    vis: DataFrame,
+    chan_bin_size: int,
+    fits: bool | None = None,
 ) -> dict:
     """Assembly step: the output tables from the cut and the averaged
-    visibility table ``vis`` (average_vis(..., keep_rep=True) form)."""
+    visibility table ``vis`` (average_vis(..., keep_rep=True) form);
+    ``fits`` is the broadcast decision for the cut's bin map."""
     out_chans, out_meta = average_spw(
         tables["spw_chans"], tables["spw_meta"], chan_bin_size
     )
     rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
     return {
         "ms_rows": average_binned_rows(cut, with_row_id=True),
-        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis),
+        **sample_tables(tables, cut.select(*BIN_MAP_COLS), vis, fits),
         "spw_chans": out_chans,
         "spw_meta": out_meta,
         # S10 passthrough: every other table (known or unknown) verbatim.
@@ -468,7 +482,9 @@ def timechannel(
     this engine knows nothing about (ref subtables.py:9-37 copies
     unknown subtables wholesale)."""
     cut = plan_timechannel(tables, time_bin_secs, fields, scans)
+    bins = cut.select(*BIN_MAP_COLS)
+    fits = map_fits_broadcast(bins)
     vis = average_vis(
-        tables["ms_vis"], cut.select(*BIN_MAP_COLS), chan_bin_size, keep_rep=True
+        tables["ms_vis"], bins, chan_bin_size, keep_rep=True, fits=fits
     )
-    return assemble_timechannel(tables, cut, vis, chan_bin_size)
+    return assemble_timechannel(tables, cut, vis, chan_bin_size, fits)

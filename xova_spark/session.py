@@ -15,7 +15,9 @@ Design notes (100 TB target, tested on local[32]):
 from __future__ import annotations
 
 import os
+import threading
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +72,49 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, thunks: list) -> list:
+    """Run independent Spark actions together, one driver thread each,
+    and return their results in input order.
+
+    A few-task job leaves most cores idle, and the scheduler can only
+    fill them with jobs that have been submitted: several such actions
+    submitted together overlap, where one after another they serialize.
+    Each thread inherits the caller's local properties (job group,
+    description) and session tags, so jobs stay attributed to the
+    caller's group (in PySpark's default pinned-thread mode, where each
+    Python thread has a JVM thread of its own). Every thunk runs to the
+    end before the first failure is re-raised: no thread outlives the
+    call, and no action is left running behind a failed one."""
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors[i] = e
+
+    def target():
+        # One wrapper per thread: each captures its own copy of the local
+        # properties, which SQL executions then set per thread. Without
+        # pinned threads (PYSPARK_PIN_THREAD=false) PySpark hands back the
+        # session itself: there are no per-thread properties to carry.
+        wrap = inheritable_thread_target(spark)
+        return wrap(run) if callable(wrap) else run
+
+    threads = [
+        threading.Thread(target=target(), args=(i,)) for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 # Legacy: if a parquet TIMESTAMP(NANOS) column is read as long nanos (the

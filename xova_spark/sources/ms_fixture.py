@@ -36,6 +36,7 @@ the semantics under test.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -298,30 +299,44 @@ def load_ms(spark, ms_dir: str) -> dict:
     output may omit row tables), and any EXTRA table present — known to
     this engine or not — is loaded too (the read-side of the S10
     wholesale subtable passthrough, subtables.py:9-37). Table keywords
-    saved by write_ms come back under ``_keywords``."""
-    out = {}
+    saved by write_ms come back under ``_keywords``.
+
+    The tables are opened concurrently (session.run_concurrently): a
+    table without a manifest schema costs a schema-inference job of a
+    task or two, and nine of those one after another leave most cores
+    idle. The temp views are registered on the calling thread once
+    every open has returned."""
+    from xova_spark.session import run_concurrently
+    from xova_spark.sources.ms_writer import load_manifest_schemas, read_table
+
     names = list(KNOWN_TABLES)
     for entry in sorted(os.listdir(ms_dir)):
         stem = entry[:-8] if entry.endswith(".parquet") else entry
         if stem not in names and not stem.startswith("_"):
             names.append(stem)
-    from xova_spark.sources.ms_writer import load_manifest_schemas, read_table
-
     schemas = load_manifest_schemas(ms_dir)
-    for name in names:
+
+    def open_table(name: str):
         for candidate in (os.path.join(ms_dir, f"{name}.parquet"),
                           os.path.join(ms_dir, name)):
             if os.path.exists(candidate):
                 try:
-                    df = read_table(spark, candidate, schemas.get(name))
+                    return read_table(spark, candidate, schemas.get(name))
                 except Exception:  # noqa: BLE001 — non-table entry
                     # Best-effort discovery: a directory that is not a
                     # parquet dataset (scratch dirs, checkpoints) is not
                     # a subtable and is simply skipped.
                     continue
-                df.createOrReplaceTempView(name)
-                out[name] = df
-                break
+        return None
+
+    frames = run_concurrently(
+        spark, [functools.partial(open_table, n) for n in names]
+    )
+    out = {}
+    for name, df in zip(names, frames):
+        if df is not None:
+            df.createOrReplaceTempView(name)
+            out[name] = df
     kw_path = os.path.join(ms_dir, "_keywords.json")
     if os.path.exists(kw_path):
         import json

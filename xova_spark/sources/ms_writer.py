@@ -12,16 +12,31 @@ DATA_DESC_ID)`` — low-cardinality directory keys (fields x ddids), with
 SCAN_NUMBER left inside files to avoid tiny-file explosion at high scan
 counts. AQE coalescing handles the reference's small-output compaction
 (V2, averaging.py:39-77) for free.
+
+The tables are written concurrently, one driver thread per table
+(session.run_concurrently) — the reference's single
+``dask.compute(*writes)`` (app.py:146). Most of them are metadata
+tables whose write is a job of a few tasks; written one after another
+they leave most cores idle, and the lazy visibility/weight/row
+aggregates run inside their own writes. The main tables come first in
+the dict, so under Spark's default FIFO scheduler their jobs, submitted
+first, keep priority for task slots; at cluster scale the big jobs
+still run first and the small ones fill the gaps. Concurrency is
+bounded by the number of tables, so there is no knob: no thread count,
+scheduler pool or conf to tune.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from xova_spark.session import run_concurrently
 
 MAIN_PARTITION_COLS = ("FIELD_ID", "DATA_DESC_ID")
 
@@ -58,47 +73,64 @@ def check_writable(path: str, force: bool) -> None:
 def write_ms(tables: dict, path: str, force: bool = False) -> dict:
     """S8/S9/S10/S11: write every DataFrame in ``tables`` under
     ``path``; refuse to overwrite unless force (app.py:152-159).
-    Returns ``{table: write seconds}``.
+    Returns ``{table: write seconds}``; the writes overlap, so the
+    seconds may sum to more than the call took (write_ms_spans has
+    each table's start and end).
 
     A ``_keywords`` entry (a plain JSON-able dict, keyed by table name)
     is persisted as ``<path>/_keywords.json`` — the parquet-layout
     analogue of the reference's table-keyword relink on passthrough
     subtables (subtables.py:35 putkeywords); load_ms restores it."""
+    spans = write_ms_spans(tables, path, force)
+    return {name: end - start for name, (start, end) in spans.items()}
+
+
+def write_ms_spans(tables: dict, path: str, force: bool = False) -> dict:
+    """write_ms, returning ``{table: (start, end)}``: each table's write
+    in seconds from the start of the call. The tables are written
+    concurrently (module docstring); the ``_schemas.json`` and
+    ``_keywords.json`` files only after every write has succeeded."""
     check_writable(path, force)
     mode = "overwrite" if force else "errorifexists"
-    schemas: dict[str, str] = {}
-    secs: dict[str, float] = {}
-    for name, df in tables.items():
-        if not isinstance(df, DataFrame):
-            continue
-        # Schema manifest: df.schema.json() costs no job, and it is what
-        # lets load_ms/read_ms re-open an EMPTY table — a partitioned
-        # write of 0 rows leaves only _SUCCESS (no footer to infer
-        # from), which must come back as a 0-row frame with the right
-        # schema, not a silently missing table (empty selections are
-        # routine at scale).
-        schemas[name] = df.schema.json()
+    frames = {n: df for n, df in tables.items() if isinstance(df, DataFrame)}
+    t0 = time.perf_counter()
+
+    def write(name: str, df: DataFrame) -> tuple[float, float]:
+        start = time.perf_counter() - t0
         sort_cols = [c for c in SORT_WITHIN.get(name, ()) if c in df.columns]
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
-        t0 = time.perf_counter()
         writer = df.write.mode(mode)
         if name == "ms_rows":
             part = [c for c in MAIN_PARTITION_COLS if c in df.columns]
             if part:
                 writer = writer.partitionBy(*part)
         writer.parquet(os.path.join(path, name))
-        secs[name] = time.perf_counter() - t0
-    if schemas:
+        return start, time.perf_counter() - t0
+
+    spark = next(iter(frames.values())).sparkSession if frames else None
+    spans = run_concurrently(
+        spark, [functools.partial(write, n, df) for n, df in frames.items()]
+    )
+    if frames:
+        # Schema manifest: df.schema.json() costs no job, and it is what
+        # lets load_ms/read_ms re-open an EMPTY table — a partitioned
+        # write of 0 rows leaves only _SUCCESS (no footer to infer
+        # from), which must come back as a 0-row frame with the right
+        # schema, not a silently missing table (empty selections are
+        # routine at scale).
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_schemas.json"), "w") as fh:
-            json.dump(schemas, fh, indent=1, sort_keys=True)
+            json.dump(
+                {n: df.schema.json() for n, df in frames.items()},
+                fh, indent=1, sort_keys=True,
+            )
     keywords = tables.get("_keywords")
     if isinstance(keywords, dict):
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_keywords.json"), "w") as fh:
             json.dump(keywords, fh, indent=1, sort_keys=True)
-    return secs
+    return dict(zip(frames, spans))
 
 
 def load_manifest_schemas(path: str) -> dict:
